@@ -1,0 +1,6 @@
+import os
+import sys
+
+# the benchmark package and the program it measures both live at the
+# checkout root
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
