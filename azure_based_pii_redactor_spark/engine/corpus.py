@@ -17,9 +17,16 @@ callers can reproduce any subset:
 
 Returns ``(corpus, report)``: the final DataFrame (url, warc_ts, lang,
 lang_pred, text) and a small driver-side dict of per-stage row counts --
-the funnel numbers every pipeline run must log.  The counts cost one
-``count()`` per enabled stage; pass ``report_counts=False`` to build the
-plan lazily with zero extra jobs.
+the funnel numbers every pipeline run must log.
+
+Report mode follows ONE rule: every stage after ``input`` is
+``localCheckpoint()``ed once and counted from that checkpoint, so the
+next stage, the count and the caller's write all read the materialized
+stage instead of re-running the plan behind it (the Python scrub kernel
+included).  That costs one ``count()`` per enabled stage, in stage
+order.  ``report_counts=False`` builds the plan lazily with zero extra
+jobs -- the production form, whose funnel comes from the lineage and
+metrics tables the checkpoint sink writes.
 """
 
 from __future__ import annotations
@@ -90,38 +97,50 @@ def build_training_corpus(
 
     if passage_n is None:
         passage_n = WINDOW_N
+    carry = ("warc_ts", "lang", "lang_pred")
     report: dict = {}
 
-    def _count(stage: str, df: DataFrame) -> DataFrame:
+    def _stage(name: str, df: DataFrame) -> DataFrame:
+        # the one report-mode rule (module docstring); the checkpoint is
+        # lazy, so the count's own job materializes it
         if report_counts:
-            report[stage] = df.count()
+            df = df.localCheckpoint(eager=False)
+            report[name] = df.count()
         return df
 
-    _count("input", pages)
+    def _as_text(cleaned: DataFrame) -> DataFrame:
+        # shared tail of the line- and passage-removal cores: back to the
+        # corpus shape; docs reduced to nothing are dropped
+        return cleaned.select(
+            "url", *carry, F.col("cleaned_text").alias("text")
+        ).filter(F.length("text") > 0)
+
+    if report_counts:
+        report["input"] = pages.count()
 
     if dedup_urls:
         from .operators.urls import dedup_pages_by_url
 
-        pages = _count(
+        pages = _stage(
             "after_url_dedup", dedup_pages_by_url(pages).drop("canonical_url")
         )
 
     if blocklist is not None:
         from .operators.urls import filter_blocklisted_domains
 
-        pages = _count(
+        pages = _stage(
             "after_blocklist", filter_blocklisted_domains(pages, blocklist)
         )
 
     if honor_noindex:
         from .operators.urls import filter_noindex
 
-        pages = _count("after_noindex", filter_noindex(pages))
+        pages = _stage("after_noindex", filter_noindex(pages))
 
     if max_per_domain is not None:
         from .operators.urls import cap_per_domain
 
-        pages = _count(
+        pages = _stage(
             "after_domain_cap", cap_per_domain(pages, max_per_domain)
         )
 
@@ -130,85 +149,45 @@ def build_training_corpus(
     scrubbed = run_scrub_pipeline(pages, **pipeline_kwargs)
     if quality_filter:
         scrubbed = scrubbed.filter(F.col("keep"))
-    kept = scrubbed.select(
-        "url", "warc_ts", "lang", "lang_pred",
-        F.col("scrubbed_text").alias("text"),
-        "n_entities",
-    )
-    if report_counts:
-        # Report mode runs one count() per stage, and every downstream
-        # stage consumes its input several times (passage removal scans
-        # windows + words; decontamination scans windows + anti-joins)
-        # -- without a materialization barrier each of those re-runs
-        # the Python scrub kernel.  localCheckpoint bounds the kernel
-        # to ONE execution.  This is the debug/driver-scale surface;
-        # at production scale use report_counts=False (fully lazy, zero
-        # extra jobs) and read the funnel from the lineage/metrics
-        # tables the checkpoint sink writes.
-        kept = kept.localCheckpoint()
-        if not quality_filter:
-            # evidence for oracles that recompute downstream stages
-            # over the RAW text: how many docs the scrub changed (one
-            # cheap agg over the checkpointed frame).  0 == the corpus
-            # is pattern-bank-clean, so raw-text recomputation is
-            # exact.  Keep-all mode ONLY: under quality_filter the
-            # frame holds kept docs alone, so the count would not mean
-            # "docs the scrub changed" -- and no oracle needs it there.
-            # NOTE for report consumers: this is a side-channel key,
-            # not a funnel stage; pipeline_corpus_builder pops it
-            # before enumerating stages.
-            report["scrub_changed_docs"] = kept.filter(
-                F.col("n_entities") > 0
-            ).count()
-    kept = _count(
+    kept = _stage(
         "after_quality_filter" if quality_filter else "after_scrub",
-        kept.drop("n_entities"),
+        scrubbed.select(
+            "url", *carry, F.col("scrubbed_text").alias("text"), "n_entities"
+        ),
     )
+    if report_counts and not quality_filter:
+        # evidence for oracles that recompute downstream stages over the
+        # RAW text: how many docs the scrub changed.  0 == the corpus is
+        # pattern-bank-clean, so raw-text recomputation is exact.
+        # Keep-all mode ONLY: under quality_filter the frame holds kept
+        # docs alone, so the count would not mean "docs the scrub
+        # changed".  A side-channel key, not a funnel stage;
+        # pipeline_corpus_builder pops it before enumerating stages.
+        report["scrub_changed_docs"] = kept.filter(
+            F.col("n_entities") > 0
+        ).count()
+    kept = kept.drop("n_entities")
 
     if remove_boilerplate is not None:
         # the SAME no-keeper line-removal core as the oracle-checked
-        # lines leg, over the scrubbed text; emptied docs are dropped
+        # lines leg, over the scrubbed text
         from .operators.textstats import remove_boilerplate_lines
 
-        kept = (
-            remove_boilerplate_lines(
-                kept, "url", min_docs=remove_boilerplate,
-                carry_cols=("warc_ts", "lang", "lang_pred"),
-            )
-            .select(
-                "url", "warc_ts", "lang", "lang_pred",
-                F.col("cleaned_text").alias("text"),
-            )
-            .filter(F.length("text") > 0)
-        )
-        if report_counts:
-            kept = kept.localCheckpoint()  # multi-consumer barrier:
-            # the boiler-set agg + join-back would otherwise re-run
-            # per downstream consumer (same class as passage removal)
-        kept = _count("after_line_dedup", kept)
+        kept = _stage("after_line_dedup", _as_text(remove_boilerplate_lines(
+            kept, "url", min_docs=remove_boilerplate, carry_cols=carry,
+        )))
 
     if remove_dup_passages:
         # the SAME keyed removal core the oracle-checked driver query
         # uses, applied with url as the document key over the SCRUBBED
-        # text; docs reduced to nothing are dropped
+        # text
         from .operators.textstats import remove_duplicate_passages
 
-        kept = (
+        kept = _stage("after_passage_removal", _as_text(
             remove_duplicate_passages(
-                kept, "url", n=passage_n,
-                carry_cols=("warc_ts", "lang", "lang_pred"),
+                kept, "url", n=passage_n, carry_cols=carry
             )
-            .select(
-                "url", "warc_ts", "lang", "lang_pred",
-                F.col("cleaned_text").alias("text"),
-            )
-            .filter(F.length("text") > 0)
-        )
-        if report_counts:
-            kept = kept.localCheckpoint()  # same rationale as above:
-            # decontamination + sampling + the final consumer would
-            # each re-run the two-scan removal plan otherwise
-        kept = _count("after_passage_removal", kept)
+        ))
 
     if eval_docs is not None:
         from .operators.textstats import decontaminate
@@ -216,7 +195,7 @@ def build_training_corpus(
         contaminated = decontaminate(
             kept, eval_docs, n=passage_n, text_col="text", id_col="url"
         ).select("url")
-        kept = _count(
+        kept = _stage(
             "after_decontamination",
             kept.join(F.broadcast(contaminated), "url", "left_anti"),
         )
@@ -224,7 +203,7 @@ def build_training_corpus(
     if sample_pct is not None:
         from .operators.textstats import md5_bucket100
 
-        kept = _count(
+        kept = _stage(
             "after_sampling",
             kept.filter(md5_bucket100("url") < sample_pct),
         )
@@ -232,16 +211,10 @@ def build_training_corpus(
     if token_budget is not None:
         from .operators.textstats import sample_to_token_budget
 
-        if report_counts:
-            # the budget op's bucket-sum collect(), the stage count, and
-            # the caller's consumption would each re-run everything
-            # after the last barrier (anti-join + sample filter) -- the
-            # same multi-consumer class bounded above
-            kept = kept.localCheckpoint()
         kept, kept_tokens = sample_to_token_budget(
             kept, token_budget, key_col="url"
         )
-        kept = _count("after_token_budget", kept)
+        kept = _stage("after_token_budget", kept)
         # always reported: the total was already computed by the one
         # eager job the budget op inherently pays -- discarding it in
         # lazy mode would force callers to re-aggregate for it (the

@@ -15,8 +15,6 @@ or model UDF can slot in on a production cluster:
   contract the kernel preserves in ``detect_with_column``).
 - X3 rate-limit retry (``file.go:511-543``) is NOT ported: Spark task
   retries (``spark.task.maxFailures``) cover transient failures.
-
-Deterministic fakes below exist for tests only.
 """
 
 from __future__ import annotations
@@ -34,66 +32,3 @@ class GPTValidator(Protocol):
     def __call__(
         self, text: str, entities: Sequence[Entity]
     ) -> Sequence[tuple[bool, bool, float]]: ...
-
-
-def null_detector(text: str) -> list[Entity]:
-    """Default: external NER disabled."""
-    return []
-
-
-class FakePersonDetector:
-    """Deterministic stand-in for the Azure PII call: flags occurrences of
-    a fixed name list as ``Person`` entities (category mapping per
-    ``azure.go:239-253``).  Test-only."""
-
-    def __init__(self, names: Sequence[str] = ("Jane Doe", "John Smith")):
-        self.names = tuple(names)
-
-    def __call__(self, text: str) -> list[Entity]:
-        out: list[Entity] = []
-        lower = text.lower()
-        for name in self.names:
-            needle = name.lower()
-            start = 0
-            while True:
-                idx = lower.find(needle, start)
-                if idx == -1:
-                    break
-                end = idx + len(name)
-                out.append(
-                    Entity(
-                        type="Person",
-                        text=text[idx:end],
-                        start=idx,
-                        end=end,
-                        confidence=0.99,
-                        category="Person",
-                    )
-                )
-                start = end
-        return out
-
-
-class ThresholdValidator:
-    """Deterministic stand-in for the GPT validator: approves redaction
-    for entities at/above a confidence threshold, rejects below.
-    Test-only (the real one fail-opens to redact on any error --
-    detector.go:153-164, preserved in kernel.scrub.detect_with_column)."""
-
-    def __init__(self, min_confidence: float = 0.75):
-        self.min_confidence = min_confidence
-
-    def __call__(self, text, entities):
-        return [
-            (e.confidence >= self.min_confidence,
-             e.confidence >= self.min_confidence,
-             0.9)
-            for e in entities
-        ]
-
-
-class FailingValidator:
-    """Always raises -- exercises the fail-open default path."""
-
-    def __call__(self, text, entities):
-        raise RuntimeError("remote validator unavailable")

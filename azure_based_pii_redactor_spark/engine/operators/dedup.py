@@ -20,7 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-MERSENNE = (1 << 61) - 1
 K_MINHASH = 32
 BANDS = 8
 ROWS_PER_BAND = 4
@@ -416,21 +415,6 @@ def _incremental_candidates(
             F.col("h.doc_id").alias("hist_id"),
         )
         .distinct()
-    )
-
-
-def _shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, __sh array<string>) per-doc DISTINCT shingle set as one
-    array column -- the same windows ``_shingles`` explodes, kept packed
-    (no explode, no shuffle).  Pair-driven scorers intersect these
-    arrays directly instead of equi-joining exploded shingles."""
-    with_words = docs.withColumn("__words", F.split("text", " "))
-    grams = F.expr(
-        f"transform(slice(__words, 1, greatest(size(__words) - {n - 1}, 0)),"
-        f" (w, i) -> concat_ws(' ', slice(__words, i + 1, {n})))"
-    )
-    return with_words.select(
-        "doc_id", F.array_distinct(grams).alias("__sh")
     )
 
 

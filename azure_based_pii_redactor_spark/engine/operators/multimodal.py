@@ -410,24 +410,6 @@ def media_stats(media: DataFrame) -> DataFrame:
     )
 
 
-# queries()-surface entries (no SQL oracle: binary container parsing is
-# not SQL-expressible -> rows-only checks)
-
-def multimodal_stats(spark, sf_dir):
-    media = generate_media(spark, 300, seed=42)
-    return media_stats(media)
-
-
-def multimodal_frame_sample(spark, sf_dir):
-    media = generate_media(spark, 200, seed=42)
-    return frame_sample(media).orderBy("media_id", "frame_idx")
-
-
-def multimodal_audio_stats(spark, sf_dir):
-    media = generate_media(spark, 300, seed=42)
-    return audio_stats(media).orderBy("media_id")
-
-
 def multimodal_suite(spark, sf_dir):
     """One driver entry covering all three media paths (decode-metadata
     rollup, video frame sampling, audio signal features) over the same

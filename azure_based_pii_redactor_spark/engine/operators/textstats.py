@@ -1351,7 +1351,9 @@ def bucket_by_score(
     NULL policy, identical in both modes: a NULL ``by`` key is its own
     group (null-safe join / its own window partition), and a NULL score
     (e.g. perplexity of an empty doc) is 'tail' -- a doc the scorer
-    cannot vouch for must never outrank a scored one.
+    cannot vouch for must never outrank a scored one.  Likewise a row
+    whose group has no row in a passed ``cuts_df`` (a language new
+    since the cuts were persisted) is kept and lands in 'tail'.
     """
     labels = F.array(*[F.lit(b) for b in CCNET_BUCKETS])
     null_tail = F.when(
@@ -1389,7 +1391,7 @@ def bucket_by_score(
     b = b.otherwise(F.lit(CCNET_BUCKETS[-1]))
     cuts_df = F.broadcast(cuts_df.withColumnRenamed(by, "__by"))
     return (
-        df.join(cuts_df, F.col(by).eqNullSafe(F.col("__by")))
+        df.join(cuts_df, F.col(by).eqNullSafe(F.col("__by")), "left")
         .withColumn("bucket", b)
         .drop("__cuts", "__by")
     )

@@ -467,12 +467,15 @@ def domain_pagerank(
 
 
 _NOINDEX_RE = (
-    r"(?i)<meta\b(?=[^>]*\bname\s*=\s*['\"]?robots\b)"
-    r"(?=[^>]*\bcontent\s*=\s*(?:['\"][^'\"]*\b(?:noindex|none)\b"
-    r"|[^'\">\s]*\b(?:noindex|none)\b))[^>]*>"
+    r"(?i)<meta\b(?=[^>]*[\s'\"/]name\s*=\s*['\"]?robots\b)"
+    r"(?=[^>]*[\s'\"/]content\s*=\s*(?:\"[^\"]*\b(?:noindex|none)\b"
+    r"|'[^']*\b(?:noindex|none)\b|[^'\">\s]*\b(?:noindex|none)\b))[^>]*>"
 )  # lookaheads make attribute ORDER irrelevant inside the one tag;
-# content values may be quoted OR bare (valid HTML5), and 'none' is the
-# documented shorthand for 'noindex, nofollow'
+# attribute names must start after a separator, so data-content= or
+# og:name= never stand in for them; content values may be double-
+# quoted (and hold an apostrophe, as in "don't"), single-quoted OR bare
+# (valid HTML5), and 'none' is the documented shorthand for 'noindex,
+# nofollow'
 
 
 def filter_noindex(pages: DataFrame, html_col: str = "html") -> DataFrame:

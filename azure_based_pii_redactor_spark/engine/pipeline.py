@@ -118,22 +118,14 @@ def _scrub_batch(
     # invariant; Python receives just this boolean), "__extracted_pre"
     # carries the extraction only when it DIFFERS from text, and
     # "__html_fallback" is non-null only for rows the JVM could not
-    # handle (malformed UTF-8 / non-wrapper).  Plain "html" appears when
-    # the kernel is fed directly (tests / library use) -- full Python
-    # extraction then.
-    if "__ext_eq_text" in pdf.columns:
-        eqs = pdf["__ext_eq_text"].tolist()
-        pres = pdf["__extracted_pre"].tolist()
-        htmls = pdf["__html_fallback"].tolist()
-        had_html = [
-            e is True or p is not None or h is not None
-            for e, p, h in zip(eqs, pres, htmls)
-        ]
-    else:
-        eqs = [None] * n
-        pres = [None] * n
-        htmls = pdf["html"].tolist()
-        had_html = [h is not None for h in htmls]
+    # handle (malformed UTF-8 / non-wrapper).
+    eqs = pdf["__ext_eq_text"].tolist()
+    pres = pdf["__extracted_pre"].tolist()
+    htmls = pdf["__html_fallback"].tolist()
+    had_html = [
+        e is True or p is not None or h is not None
+        for e, p, h in zip(eqs, pres, htmls)
+    ]
     extracted_all: list[str] = [""] * n
     for i in range(n):
         if eqs[i] is True:
@@ -198,7 +190,6 @@ def run_scrub_pipeline(
     min_lang_score: float = MIN_LANG_SCORE,
     max_perplexity: float = MAX_PERPLEXITY,
     scrub_all: bool = False,
-    repartition_to: int | None = None,
     column_config: ColumnConfig | None = None,
     gpt_validator=None,
     external_detector=None,
@@ -222,10 +213,6 @@ def run_scrub_pipeline(
                     column_config, gpt_validator, external_detector,
                 )
 
-    if repartition_to is not None:
-        # Round-robin repartition: uniform Arrow batches for the kernel
-        # regardless of upstream file-split skew.
-        pages = pages.repartition(repartition_to)
     from pyspark.sql import functions as F
 
     # JVM pre-extraction: html bytes cross into Python ONLY for rows the

@@ -64,15 +64,3 @@ TRAINING_FEEDBACK_SCHEMA = T.StructType(
         T.StructField("session_id", T.StringType(), True),
     ]
 )
-
-# Per-partition lineage rows (checkpointed resume -- SURVEY.md T4).
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("part_bucket", T.IntegerType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("n_kept", T.LongType(), False),
-        T.StructField("n_entities", T.LongType(), False),
-        T.StructField("completed_ts", T.TimestampType(), False),
-    ]
-)

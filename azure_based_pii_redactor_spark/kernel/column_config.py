@@ -181,9 +181,6 @@ class ColumnConfig:
         return canonical_sort(filtered)
 
 
-DEFAULT_COLUMN_CONFIG = ColumnConfig()
-
-
 class ColumnConfigManager:
     """Per-column config registry with JSON (de)serialization -- mirrors
     ``ColumnConfigManager`` (column_config.go:102-136, LoadFromJSON

@@ -286,7 +286,6 @@ _REQUIRES: dict[str, tuple[str, ...]] = {
     # NOT vin: [A-HJ-NPR-Z0-9]{17} admits all-letter strings
 }
 
-_DIGITS = tuple(str(d) for d in range(10))
 _DIGIT_RE = re.compile(r"[0-9]")
 
 

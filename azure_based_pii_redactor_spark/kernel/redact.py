@@ -42,9 +42,7 @@ class RedactOptions:
 
     redaction_mode: str = "replace"  # "replace" | "mask" | "remove"
     custom_labels: dict[str, str] = field(default_factory=dict)
-    preserve_cases: bool = False
     use_training: bool = True
-    skip_header: bool = False
     export_style_fallback: bool = False  # file.go:1169-1172 variant
 
 

@@ -59,20 +59,15 @@ def scrub_text(
     text: str,
     options: RedactOptions = DEFAULT_OPTIONS,
     feedback_history: Sequence[FeedbackRecord] = (),
-    column_config: ColumnConfig | None = None,
-    external_detector=None,
 ) -> ScrubResult:
     """End-to-end scrub of one document (``Detector.Redact`` --
-    detector.go:192-243)."""
-    extra = external_detector(text) if external_detector is not None else ()
+    detector.go:192-243).  Column filtering and external stages are
+    ``scrub_text_advanced``'s path."""
     entities = detect(
         text,
         feedback_history=feedback_history,
         use_training=options.use_training,
-        extra_entities=extra,
     )
-    if column_config is not None:
-        entities = column_config.apply_filtering(entities, text)
     scrubbed = apply_redaction(text, entities, options)
     return ScrubResult(scrubbed_text=scrubbed, entities=entities)
 

@@ -233,6 +233,61 @@ def encode_warc(
     return b"".join(out)
 
 
+def _write_corpus(
+    spark: SparkSession, path: str, n_rows: int, seed: int, files: int,
+    payload_col: str, suffix: str, **encode_kw,
+) -> int:
+    """The shared body of ``write_warc_corpus`` and ``write_wet_corpus``:
+    generate the deterministic pages corpus over ``files`` partitions;
+    each partition encodes its rows' ``payload_col`` (cast to bytes, so
+    a string column lands UTF-8 encoded) as record payloads
+    (``encode_warc(**encode_kw)``) into ONE ``part-NNNNN<suffix>`` file
+    -- the one-file-per-task granularity the readers scan back, so
+    generation is distributed and the file count, the unit of scan
+    parallelism, is explicit.  Returns the page count."""
+    import os
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from .pages import generate_pages
+
+    os.makedirs(path, exist_ok=True)
+    pages = generate_pages(spark, n_rows, seed, parts=files).select(
+        "url", "warc_ts", F.col(payload_col).cast("binary").alias("payload")
+    )
+
+    def write_part(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        rows = []
+        for pdf in batches:
+            for url, ts, body in zip(
+                pdf["url"], pdf["warc_ts"], pdf["payload"]
+            ):
+                rows.append(
+                    {
+                        "url": url,
+                        # pandas delivers null timestamps as NaT, not
+                        # None -- pd.isna catches both
+                        "warc_ts": None if pd.isna(ts)
+                        else ts.to_pydatetime(),
+                        "html": b"" if body is None else bytes(body),
+                    }
+                )
+        blob = encode_warc(rows, gzip_members=True, **encode_kw)
+        with open(os.path.join(path, f"part-{pid:05d}{suffix}"), "wb") as f:
+            f.write(blob)
+        yield pd.DataFrame({"n": [len(rows)]})
+
+    return int(
+        pages.mapInPandas(write_part, schema="n long")
+        .agg(F.sum("n"))
+        .first()[0]
+    )
+
+
 def write_warc_corpus(
     spark: SparkSession,
     path: str,
@@ -244,50 +299,10 @@ def write_warc_corpus(
     """Materialize a deterministic pages corpus as ``files`` Common-
     Crawl-layout ``.warc.gz`` files (one gzip member per record, html
     nested in an HTTP response payload) -- the bench/test fixture for
-    the WARC front door.  Each Spark partition encodes and writes ONE
-    file (the same one-file-per-task granularity ``read_warc`` scans
-    back), so generation is distributed and the file count -- the unit
-    of scan parallelism -- is explicit.  Returns the page count."""
-    import os
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from .pages import generate_pages
-
-    os.makedirs(path, exist_ok=True)
-    pages = generate_pages(spark, n_rows, seed, parts=files)
-
-    def write_part(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows = []
-        for pdf in batches:
-            for url, ts, html in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"]
-            ):
-                rows.append(
-                    {
-                        "url": url,
-                        # pandas delivers null timestamps as NaT, not
-                        # None -- pd.isna catches both
-                        "warc_ts": None if pd.isna(ts)
-                        else ts.to_pydatetime(),
-                        "html": b"" if html is None else bytes(html),
-                    }
-                )
-        blob = encode_warc(rows, gzip_members=True, http_wrap=http_wrap)
-        with open(
-            os.path.join(path, f"part-{pid:05d}.warc.gz"), "wb"
-        ) as f:
-            f.write(blob)
-        yield pd.DataFrame({"n": [len(rows)]})
-
-    return int(
-        pages.mapInPandas(write_part, schema="n long")
-        .agg(F.sum("n"))
-        .first()[0]
+    the WARC front door.  Returns the page count."""
+    return _write_corpus(
+        spark, path, n_rows, seed, files, "html", ".warc.gz",
+        http_wrap=http_wrap,
     )
 
 
@@ -302,48 +317,8 @@ def write_wet_corpus(
     pages corpus as ``files`` ``.wet.gz`` files of ``conversion``
     records whose payload is each page's extracted plain TEXT (no HTTP
     envelope) -- the layout most Common-Crawl text pipelines actually
-    ingest, and the fixture behind the ``wet_scan`` bench entry.  One
-    file per Spark partition, same as the WARC writer: file count IS
-    the scan-parallelism unit."""
-    import os
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from .pages import generate_pages
-
-    os.makedirs(path, exist_ok=True)
-    pages = generate_pages(spark, n_rows, seed, parts=files)
-
-    def write_part(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows = []
-        for pdf in batches:
-            for url, ts, text in zip(
-                pdf["url"], pdf["warc_ts"], pdf["text"]
-            ):
-                rows.append(
-                    {
-                        "url": url,
-                        "warc_ts": None if pd.isna(ts)
-                        else ts.to_pydatetime(),
-                        "html": ("" if text is None else text).encode(),
-                    }
-                )
-        blob = encode_warc(
-            rows, gzip_members=True, http_wrap=False,
-            record_type="conversion",
-        )
-        with open(
-            os.path.join(path, f"part-{pid:05d}.wet.gz"), "wb"
-        ) as f:
-            f.write(blob)
-        yield pd.DataFrame({"n": [len(rows)]})
-
-    return int(
-        pages.mapInPandas(write_part, schema="n long")
-        .agg(F.sum("n"))
-        .first()[0]
+    ingest, and the fixture behind the ``wet_scan`` bench entry."""
+    return _write_corpus(
+        spark, path, n_rows, seed, files, "text", ".wet.gz",
+        record_type="conversion",
     )

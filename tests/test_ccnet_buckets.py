@@ -175,6 +175,25 @@ def test_threshold_cuts_reusable_for_identical_selection(spark):
     assert a == b
 
 
+def test_threshold_group_without_cuts_row_lands_in_tail(spark):
+    """Persisted cuts predate a language: its rows must survive the
+    cuts join and land in 'tail' (a scorer that cannot place a doc must
+    never outrank a placed one), while the known group is bucketed by
+    its cuts as before."""
+    docs = spark.createDataFrame(
+        [(1, "en", 1.0), (2, "en", 5.0), (3, "en", 9.0),
+         (4, "sw", 1.0), (5, "sw", None)],
+        "doc_id int, lang string, score double",
+    )
+    cuts = spark.createDataFrame(
+        [("en", [3.0, 6.0])], "lang string, __cuts array<double>"
+    )
+    got = {r["doc_id"]: r["bucket"] for r in ts.bucket_by_score(
+        docs, "score", mode="threshold", cuts_df=cuts
+    ).collect()}
+    assert got == {1: "head", 2: "middle", 3: "tail", 4: "tail", 5: "tail"}
+
+
 def test_hashed_linear_score_host_recompute(spark):
     """clf_score is bit-exact against a host-side reimplementation of
     the hash->bucket->weight->sum pipeline (the same guarantee the

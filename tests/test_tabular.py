@@ -2,13 +2,12 @@
 cell export (canonical + compat), external stages (FIXTURES.md section 5,
 SURVEY.md S1-S8 / J4 / X1-X2)."""
 
-import pytest
+import sys
+from typing import Sequence
 
-from azure_based_pii_redactor_spark.engine.external import (
-    FailingValidator,
-    FakePersonDetector,
-    ThresholdValidator,
-)
+import pytest
+from pyspark import cloudpickle
+
 from azure_based_pii_redactor_spark.engine.tabular_pipeline import (
     export_tabular_cells,
     scrub_tabular,
@@ -109,6 +108,62 @@ def test_redact_cell_value_containment():
 
 
 # -- external stages -------------------------------------------------------------
+
+class FakePersonDetector:
+    """Deterministic stand-in for the Azure PII call: flags occurrences of
+    a fixed name list as ``Person`` entities (category mapping per
+    ``azure.go:239-253``)."""
+
+    def __init__(self, names: Sequence[str] = ("Jane Doe", "John Smith")):
+        self.names = tuple(names)
+
+    def __call__(self, text: str) -> list[Entity]:
+        out: list[Entity] = []
+        lower = text.lower()
+        for name in self.names:
+            needle = name.lower()
+            start = 0
+            while True:
+                idx = lower.find(needle, start)
+                if idx == -1:
+                    break
+                end = idx + len(name)
+                out.append(Entity(type="Person", text=text[idx:end],
+                                  start=idx, end=end, confidence=0.99,
+                                  category="Person"))
+                start = end
+        return out
+
+
+class ThresholdValidator:
+    """Deterministic stand-in for the GPT validator: approves redaction
+    for entities at/above a confidence threshold, rejects below (the real
+    one fail-opens to redact on any error -- detector.go:153-164,
+    preserved in kernel.scrub.detect_with_column)."""
+
+    def __init__(self, min_confidence: float = 0.75):
+        self.min_confidence = min_confidence
+
+    def __call__(self, text, entities):
+        return [
+            (e.confidence >= self.min_confidence,
+             e.confidence >= self.min_confidence,
+             0.9)
+            for e in entities
+        ]
+
+
+class FailingValidator:
+    """Always raises -- exercises the fail-open default path."""
+
+    def __call__(self, text, entities):
+        raise RuntimeError("remote validator unavailable")
+
+
+# the doubles ride into Spark tasks (test_pipeline_advanced_path), and a
+# test module is not importable on the Python workers: ship them by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
 
 def test_detect_with_column_gpt_paths():
     text = "patient mail a@b.com ssn 536-90-4399"

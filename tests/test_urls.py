@@ -389,6 +389,8 @@ def test_filter_noindex(spark):
         # the documented 'none' shorthand for noindex+nofollow
         page(10, "<meta name=robots content=noindex>"),
         page(11, '<meta name="robots" content="none">'),
+        # dropped: an apostrophe inside a double-quoted value
+        page(12, '<meta name="robots" content="don\'t index, noindex">'),
         # kept: noindex content under a NON-robots meta name, index
         # directive, noindex as body text, agent-specific directive
         # (someone else's crawler), attributes split across DIFFERENT
@@ -398,13 +400,18 @@ def test_filter_noindex(spark):
         page(6, "<meta name='googlebot' content='noindex'>"),
         page(7, '<meta name="robots"><meta content="noindex">'),
         page(8, ""),
+        # kept: an attribute whose name only ENDS in content/name
+        page(13, '<meta name="robots" data-content="noindex">'),
+        page(14, '<meta data-name="robots" content="noindex">'),
     ]
     rows.append(("https://x.example/p9", None))  # NULL html: kept
     df = spark.createDataFrame(rows, "url string, html string").select(
         "url", F.col("html").cast("binary").alias("html")
     )
     kept = {r["url"] for r in filter_noindex(df).collect()}
-    assert kept == {f"https://x.example/p{i}" for i in (4, 5, 6, 7, 8, 9)}
+    assert kept == {
+        f"https://x.example/p{i}" for i in (4, 5, 6, 7, 8, 9, 13, 14)
+    }
 
 
 def test_corpus_builder_honor_noindex(spark):
