@@ -10,10 +10,17 @@ unit of work here is a deterministic URL-hash BUCKET:
   bucket's files -- the parquet-native equivalent of Iceberg MERGE keyed by
   (run_id, bucket); the writer is format-agnostic so an Iceberg catalog can
   be slotted in where its jars exist).
+- the parquet writer shuffles the kernel output once by bucket
+  (``REBALANCE(part_bucket)``, ``tableio.ParquetBucketWriter``), so files
+  ~= non-empty buckets, not input tasks x buckets: at 10^5 input splits x
+  10^5 buckets the unclustered write would make up to 10^10 files, every
+  one listed by each resume.  The kernel stage itself stays narrow.
 - a lineage row (run_id, part_bucket, counts, ts) is appended AFTER the
-  bucket's data commits; lineage is therefore the checkpoint marker.
+  bucket's data commits, one file per invocation; lineage is therefore
+  the checkpoint marker.
 - resume = broadcast anti-join of the input against completed lineage
-  buckets: already-done buckets are never recomputed or rewritten.
+  buckets (the lineage is read once per invocation): already-done buckets
+  are never recomputed or rewritten.
 
 ``part_bucket = pmod(xxhash64(url), n_buckets)`` is deterministic (no
 rand), so the same url always lands in the same bucket across runs --
@@ -61,6 +68,26 @@ def completed_buckets(
     )
 
 
+def completed_bucket_ids(
+    spark: SparkSession, lineage_path: str, run_id: str
+) -> set[int]:
+    """``completed_buckets`` collected to the driver (<= n_buckets ints);
+    empty on a fresh run."""
+    done = completed_buckets(spark, lineage_path, run_id)
+    return {r.part_bucket for r in done.collect()} if done is not None else set()
+
+
+def _drop_done(bucketed: DataFrame, done_ids: set[int]) -> DataFrame:
+    # the done side is a local relation, so the kernel job does not list
+    # or scan the lineage table again
+    if not done_ids:
+        return bucketed
+    done = bucketed.sparkSession.createDataFrame(
+        [(b,) for b in sorted(done_ids)], "part_bucket int"
+    )
+    return bucketed.join(F.broadcast(done), "part_bucket", "left_anti")
+
+
 def filter_remaining(
     pages: DataFrame,
     lineage_path: str,
@@ -68,11 +95,8 @@ def filter_remaining(
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Anti-join input against completed lineage (resume primitive)."""
-    bucketed = with_bucket(pages, n_buckets)
-    done = completed_buckets(pages.sparkSession, lineage_path, run_id)
-    if done is None:
-        return bucketed
-    return bucketed.join(F.broadcast(done), "part_bucket", "left_anti")
+    done_ids = completed_bucket_ids(pages.sparkSession, lineage_path, run_id)
+    return _drop_done(with_bucket(pages, n_buckets), done_ids)
 
 
 def write_scrub_output(
@@ -167,11 +191,17 @@ def write_scrub_output(
         )
         .collect()  # <= n_buckets tiny rows, written AND counted below
     )
-    lineage = spark.createDataFrame(
-        rows,
-        "run_id string, part_bucket int, n_docs long, n_kept long,"
-        " n_entities long",
-    ).withColumn("completed_ts", F.current_timestamp())
+    # one lineage file per invocation: createDataFrame would split the
+    # rows into defaultParallelism files, and every resume lists them
+    lineage = (
+        spark.createDataFrame(
+            rows,
+            "run_id string, part_bucket int, n_docs long, n_kept long,"
+            " n_entities long",
+        )
+        .coalesce(1)
+        .withColumn("completed_ts", F.current_timestamp())
+    )
     lineage.write.mode("append").parquet(lineage_path)
     return int(sum(r.n_docs for r in rows))
 
@@ -200,24 +230,21 @@ def run_checkpointed(
     """
     from .pipeline import run_scrub_pipeline
 
-    spark = pages.sparkSession
-    remaining = filter_remaining(pages, lineage_path, run_id, n_buckets)
-    # Candidate buckets are derived DRIVER-SIDE from the (tiny) lineage
-    # table: all-minus-completed.  Enumerating them from `remaining`
-    # would execute a full input scan + anti-join as a separate job
-    # before the kernel job re-runs the same scan -- an entire extra
+    # The lineage table is read once: the completed ids drive both the
+    # resume anti-join and the candidate buckets.  Candidates are derived
+    # DRIVER-SIDE from them: all-minus-completed.  Enumerating them from
+    # the anti-joined input would execute a full input scan as a separate
+    # job before the kernel job re-runs the same scan -- an entire extra
     # pass over the corpus at 10^12 docs.  Candidate buckets the input
     # never populates are harmless: write_scrub_output intersects them
     # with the bucket set the write job actually observes, so they
     # produce no lineage rows even when a reused output dir holds
     # stale partitions under those bucket ids.
-    done = completed_buckets(spark, lineage_path, run_id)
-    done_ids = (
-        {r.part_bucket for r in done.collect()} if done is not None else set()
-    )
+    done_ids = completed_bucket_ids(pages.sparkSession, lineage_path, run_id)
     bucket_ids = [b for b in range(n_buckets) if b not in done_ids]
     if not bucket_ids:
         return 0
+    remaining = _drop_done(with_bucket(pages, n_buckets), done_ids)
     out = run_scrub_pipeline(remaining, **pipeline_kwargs)
     # part_bucket is recomputed from url (deterministic), keeping the
     # kernel output schema independent of checkpointing.

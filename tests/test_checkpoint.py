@@ -93,6 +93,41 @@ def test_lineage_counts_match_output(spark, tmp_path):
     assert tuple(agg_l) == tuple(agg_o)
 
 
+def parquet_files(path):
+    import glob
+
+    return glob.glob(f"{path}/**/*.parquet", recursive=True)
+
+
+def test_files_scale_with_buckets_not_tasks(spark, tmp_path):
+    """8 input tasks x 16 buckets: the bucket-clustered write leaves at
+    most one file per bucket (unclustered, each task writes a file into
+    every bucket it holds: up to 128), with the same rows as the
+    kernel's own output."""
+    pages = generate_pages(spark, N, seed=13, parts=8)
+    out, lin = str(tmp_path / "o"), str(tmp_path / "l")
+    assert run_checkpointed(pages, out, lin, "r", n_buckets=16) == N
+    written = spark.read.parquet(out).select("part_bucket").distinct().count()
+    assert len(parquet_files(out)) <= written
+    want = (
+        run_scrub_pipeline(pages)
+        .select("url", "keep", "drop_reason", "scrubbed_text", "n_entities")
+        .toPandas()
+        .sort_values("url")
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(read_sorted(spark, out), want)
+
+
+def test_lineage_append_is_one_file_per_invocation(spark, tmp_path):
+    pages = generate_pages(spark, 200, seed=4)
+    lin = str(tmp_path / "l")
+    run_checkpointed(pages, str(tmp_path / "o1"), lin, "r1", n_buckets=BUCKETS)
+    assert len(parquet_files(lin)) == 1
+    run_checkpointed(pages, str(tmp_path / "o2"), lin, "r2", n_buckets=BUCKETS)
+    assert len(parquet_files(lin)) == 2
+
+
 # -- metrics -------------------------------------------------------------------
 
 @pytest.fixture(scope="module")
