@@ -24,9 +24,13 @@ Report mode follows ONE rule: every stage after ``input`` is
 next stage, the count and the caller's write all read the materialized
 stage instead of re-running the plan behind it (the Python scrub kernel
 included).  That costs one ``count()`` per enabled stage, in stage
-order.  ``report_counts=False`` builds the plan lazily with zero extra
+order.  ``report_counts=False`` builds the plan lazily with no count
 jobs -- the production form, whose funnel comes from the lineage and
-metrics tables the checkpoint sink writes.
+metrics tables the checkpoint sink writes.  Construction is not fully
+job-free: with url dedup AND passage removal both on (the defaults),
+building passage removal's lazy window checkpoint over url dedup's
+exchange runs that shuffle stage under AQE -- 1 job at construction
+(0 with either stage off).
 """
 
 from __future__ import annotations
@@ -90,8 +94,9 @@ def build_training_corpus(
     ``kept_tokens`` (a side-channel report key like
     ``scrub_changed_docs``, not a stage).  Note: the budget's bucket-sum
     pass is one eager job even with ``report_counts=False`` -- picking
-    the cutoff bucket requires it; the zero-extra-jobs guarantee of lazy
-    mode holds for every other stage.
+    the cutoff bucket requires it; lazy mode adds no count job for any
+    other stage (construction itself runs 1 job when url dedup and
+    passage removal are both on -- module docstring).
     """
     from .operators.textstats import WINDOW_N
 

@@ -251,7 +251,8 @@ def pipeline_corpus_builder(spark, sf_dir) -> DataFrame:
     The funnel counts are computed with one Spark job per stage (the
     numbers every production run logs); the composed plan itself stays
     lazy -- pass ``report_counts=False`` to ``build_training_corpus``
-    for the zero-extra-jobs form.
+    for the form without count jobs (its construction still runs 1 job
+    while url dedup and passage removal are both on).
     """
     from ..corpus import build_training_corpus
 

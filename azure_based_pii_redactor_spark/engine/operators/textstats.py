@@ -189,26 +189,19 @@ def text_ngram_top(spark, sf_dir):
 
 def text_langid_kernel(spark, sf_dir):
     """Kernel language-ID over documents (vectorized mapInPandas; no SQL
-    oracle -- rows-only check).  The same langid the fused pipeline uses."""
-    from ...quality.langid import predict_language
+    oracle -- rows-only check).  The same langid the fused pipeline uses:
+    one ``predict_language_batch`` call per Arrow batch."""
+    from ...quality.langid import predict_language_batch
 
-    d = _docs(spark, sf_dir).select("doc_id", "text", "lang")
+    d = _docs(spark, sf_dir).select("text", "lang")
 
     def run(batches):
         for pdf in batches:
-            preds = [predict_language(t or "") for t in pdf["text"]]
+            preds = predict_language_batch([t or "" for t in pdf["text"]])
             yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "lang": pdf["lang"],
-                    "lang_pred": [p[0] for p in preds],
-                    "lang_score": [p[1] for p in preds],
-                }
-            )
+                {"lang": pdf["lang"], "lang_pred": [p[0] for p in preds]})
 
-    out = d.mapInPandas(
-        run, schema="doc_id long, lang string, lang_pred string, lang_score double"
-    )
+    out = d.mapInPandas(run, schema="lang string, lang_pred string")
     return (
         out.groupBy("lang", "lang_pred")
         .agg(F.count("*").alias("n"))
@@ -540,11 +533,13 @@ def remove_duplicate_passages(
     both gone.  (1) one window explode, lazily localCheckpointed (two
     consumers, one materialization; the explode itself -- 5.5M
     concat_ws slices on the bench corpus -- was the single biggest
-    cost, and a lazy checkpoint keeps the operator
-    construction-time-silent); (2) keeper choice is a HASH aggregate
-    ``min(struct(key, pos))`` per window (same ordering row_number used)
-    with map-side partial aggregation -- no sort, and the hot-window
-    shuffle collapses per-partition; (3) the (tiny, cnt>=2) keeper set
+    cost; the lazy checkpoint submits no job at construction only when
+    no exchange sits below ``df`` -- over a shuffled input, such as url
+    dedup's in ``build_training_corpus``, building the checkpoint runs
+    that shuffle stage under AQE, 1 job); (2) keeper choice is a HASH
+    aggregate ``min(struct(key, pos))`` per window (same ordering
+    row_number used) with map-side partial aggregation -- no sort, and
+    the hot-window shuffle collapses per-partition; (3) the (tiny, cnt>=2) keeper set
     broadcasts back onto the windows to emit removed occurrences --
     at corpus scales where the duplicated-window set outgrows a
     broadcast, drop the hint and this becomes one shuffle-join keyed by

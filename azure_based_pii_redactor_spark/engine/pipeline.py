@@ -6,6 +6,11 @@ batch, SURVEY.md section 4 item 3 -- chaining separate pandas UDFs would
 pay one JVM<->Python round-trip per stage).  Everything upstream and
 downstream (filters, projections, aggregations, writes) stays JVM-side.
 
+Extraction has one path: the html column crosses the JVM->Python
+boundary once, as-is, and ``extract_text`` decodes it in the kernel --
+the same function the single-process oracle calls, so Spark and the
+oracle agree on the extracted text per url by construction.
+
 Scale design:
 - narrow stage: no shuffle; input split sizing via
   ``spark.sql.files.maxPartitionBytes`` (session.py) keeps Arrow batches
@@ -37,28 +42,6 @@ from .schema import SCRUB_OUTPUT_SCHEMA
 
 _WRAP_PREFIX = b"<html><body>"
 _WRAP_SUFFIX = b"</body></html>"
-
-# JVM-side extraction fast path: strip the canonical wrapper and decode
-# inside whole-stage codegen.  The re-encode equality proves the bytes
-# were valid UTF-8, i.e. the JVM cast is byte-identical to Python's
-# decode; malformed or non-wrapper rows fall back to the Python kernel
-# (errors='replace' / html.parser extraction), preserving exact semantics.
-#
-# Arrow-exchange effect: on the dominant path (wrapper html whose
-# extraction equals the text column -- the dataset invariant) Python
-# receives ONE BOOLEAN instead of the html bytes; the extracted string
-# ships only when it differs from text, html bytes only on the fallback.
-# Net: the html column's bytes leave the JVM only for malformed or
-# non-wrapper rows.
-_SUB = "substring(html, 13, length(html) - 26)"
-_PRE_EXTRACT_SQL = f"""
-    CASE WHEN html IS NULL THEN NULL
-         WHEN left(html, 12) = X'3C68746D6C3E3C626F64793E'
-          AND right(html, 14) = X'3C2F626F64793E3C2F68746D6C3E'
-          AND encode(cast({_SUB} AS string), 'UTF-8') = {_SUB}
-         THEN cast({_SUB} AS string)
-         ELSE NULL END
-"""
 
 
 def extract_text(html: bytes | None) -> str | None:
@@ -113,28 +96,10 @@ def _scrub_batch(
         "scrubbed_text": [None] * n,
     }
     texts = pdf["text"].tolist()
-    # JVM pre-extraction columns: "__ext_eq_text" is True when the JVM
-    # fast path extracted a string equal to the text column (the dataset
-    # invariant; Python receives just this boolean), "__extracted_pre"
-    # carries the extraction only when it DIFFERS from text, and
-    # "__html_fallback" is non-null only for rows the JVM could not
-    # handle (malformed UTF-8 / non-wrapper).
-    eqs = pdf["__ext_eq_text"].tolist()
-    pres = pdf["__extracted_pre"].tolist()
-    htmls = pdf["__html_fallback"].tolist()
-    had_html = [
-        e is True or p is not None or h is not None
-        for e, p, h in zip(eqs, pres, htmls)
-    ]
     extracted_all: list[str] = [""] * n
-    for i in range(n):
-        if eqs[i] is True:
-            extracted = texts[i] or ""
-        elif pres[i] is not None:
-            extracted = pres[i]
-        else:
-            extracted = extract_text(htmls[i])
-        if extracted is None or not had_html[i]:
+    for i, html in enumerate(pdf["html"].tolist()):
+        extracted = extract_text(html)
+        if extracted is None:
             # No html payload: nothing to extract, fall back to the text
             # column; the invariant is vacuously satisfied.
             extracted = texts[i] or ""
@@ -213,34 +178,8 @@ def run_scrub_pipeline(
                     column_config, gpt_validator, external_detector,
                 )
 
-    from pyspark.sql import functions as F
-
-    # JVM pre-extraction: html bytes cross into Python ONLY for rows the
-    # codegen fast path could not decode (non-wrapper or malformed UTF-8).
-    pre = (
-        pages.withColumn("__ext", F.expr(_PRE_EXTRACT_SQL))
-        .withColumn(
-            "__ext_eq_text",
-            F.when(
-                F.col("__ext").isNotNull(),
-                F.col("__ext") == F.coalesce(F.col("text"), F.lit("")),
-            ),
-        )
-        .withColumn(
-            "__extracted_pre",
-            F.when(F.col("__ext_eq_text") == F.lit(False), F.col("__ext")),
-        )
-        .withColumn(
-            "__html_fallback",
-            F.when(
-                F.col("__ext").isNull() & F.col("html").isNotNull(),
-                F.col("html"),
-            ),
-        )
-        .select("url", "warc_ts", "text", "lang", "__ext_eq_text",
-                "__extracted_pre", "__html_fallback")
-    )
-    return pre.mapInPandas(fused, schema=SCRUB_OUTPUT_SCHEMA)
+    return pages.select("url", "warc_ts", "html", "text", "lang").mapInPandas(
+        fused, schema=SCRUB_OUTPUT_SCHEMA)
 
 
 def documents_as_pages(documents: DataFrame) -> DataFrame:

@@ -42,6 +42,21 @@ class BucketTableWriter(Protocol):
     def read(self, spark: SparkSession, target: str) -> DataFrame: ...
 
 
+def overwrite_partitions(df: DataFrame, column: str, path: str) -> None:
+    """Idempotent parquet write: replace exactly the ``column`` partitions
+    present in ``df``, leave every other partition under ``path`` as is.
+
+    The dynamic mode is pinned PER WRITE: relying on the session default
+    would silently truncate all previously completed partitions under
+    Spark's STATIC default on foreign sessions."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(column)
+        .parquet(path)
+    )
+
+
 class ParquetBucketWriter:
     """Dynamic partition overwrite on parquet (requires
     ``spark.sql.sources.partitionOverwriteMode=dynamic`` -- session.py).
@@ -57,16 +72,8 @@ class ParquetBucketWriter:
     size."""
 
     def overwrite_buckets(self, df: DataFrame, target: str) -> None:
-        # the dynamic mode is pinned PER WRITE: relying on the session
-        # default would silently truncate all previously completed bucket
-        # partitions under Spark's STATIC default on foreign sessions
-        (
-            df.hint("rebalance", "part_bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_bucket")
-            .parquet(target)
-        )
+        overwrite_partitions(
+            df.hint("rebalance", "part_bucket"), "part_bucket", target)
 
     def read(self, spark: SparkSession, target: str) -> DataFrame:
         return spark.read.parquet(target)

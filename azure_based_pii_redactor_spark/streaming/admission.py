@@ -34,6 +34,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..engine.tableio import overwrite_partitions
+from .dedup_stream import start_foreach_batch
+
 ADMITTED_SCHEMA = "doc_id long, text string, epoch_id int"
 BAND_SCHEMA = "doc_id long, band int, bucket long, epoch_id int"
 
@@ -65,14 +68,11 @@ def seed_band_store(history_docs: DataFrame, band_store_path: str) -> None:
     dynamic overwrite without disturbing the seed)."""
     from ..engine.operators.dedup import _band_hashes, _signatures_for
 
-    (
+    seed = (
         _band_hashes(_signatures_for(history_docs.select("doc_id", "text")))
         .withColumn("epoch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(band_store_path)
     )
+    overwrite_partitions(seed, "epoch_id", band_store_path)
 
 
 def run_streaming_admission(
@@ -126,26 +126,12 @@ def run_streaming_admission(
         # (its docs still guard via the text-union history side on the
         # next run, and the epoch replay rewrites both) rather than
         # bands for documents the output does not hold
-        (
-            admitted.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(output_path)
-        )
-        (
-            inc_bands.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(band_store_path)
-        )
+        overwrite_partitions(
+            admitted.withColumn("epoch_id", F.lit(epoch_id)), "epoch_id",
+            output_path)
+        overwrite_partitions(
+            inc_bands.withColumn("epoch_id", F.lit(epoch_id)), "epoch_id",
+            band_store_path)
 
-    writer = new_docs_stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(
+        new_docs_stream, sink, checkpoint_path, processing_time)

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..engine.tableio import overwrite_partitions
+
 
 def dedupe_stream(
     pages_stream: DataFrame,
@@ -71,16 +73,25 @@ def write_stream_exactly_once(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        (
-            batch_df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(output_path)
-        )
+        overwrite_partitions(
+            batch_df.withColumn("epoch_id", F.lit(epoch_id)), "epoch_id",
+            output_path)
 
+    return start_foreach_batch(
+        out_stream, sink, checkpoint_path, processing_time)
+
+
+def start_foreach_batch(
+    stream: DataFrame,
+    sink,
+    checkpoint_path: str,
+    processing_time: str | None = None,
+):
+    """Start ``stream`` into the ``foreachBatch`` ``sink``: trigger
+    availableNow (backfill) by default, ``processingTime=processing_time``
+    for continuous tailing.  Returns the started StreamingQuery."""
     writer = (
-        out_stream.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_path)
     )
     if processing_time is not None:

@@ -31,8 +31,9 @@ def _entries():
     return [
         ("Fused scrub pipeline (flagship)",
          "ONE narrow mapInPandas stage, no Exchange anywhere: the kernel "
-         "is embarrassingly parallel; the JVM pre-extraction CASE runs "
-         "inside the scan projection.",
+         "is embarrassingly parallel; its input is exactly url, warc_ts, "
+         "html, text, lang -- html crosses into Python once and "
+         "extract_text decodes it there.",
          pipeline),
         ("agg_tpch_q1",
          "HashAggregate appears TWICE around one Exchange (map-side "

@@ -11,6 +11,7 @@ from azure_based_pii_redactor_spark.engine.pipeline import (
     extract_text,
     run_scrub_pipeline,
 )
+from azure_based_pii_redactor_spark.engine.schema import PAGES_SCHEMA
 from azure_based_pii_redactor_spark.kernel.redact import RedactOptions
 from azure_based_pii_redactor_spark.kernel.scrub import scrub_text
 from azure_based_pii_redactor_spark.quality.decide import decide
@@ -26,12 +27,14 @@ FEEDBACK = [
 ]
 
 
-def oracle_frame(seed: int, n: int, feedback=()) -> pd.DataFrame:
-    """Single-process oracle over the same generated rows."""
-    pdf = generate_batch(np.arange(n), seed)
+def oracle_rows(pdf: pd.DataFrame, feedback=()) -> pd.DataFrame:
+    """Single-process oracle: extract_text -> decide -> scrub_text."""
     rows = []
     for r in pdf.itertuples(index=False):
         text = extract_text(r.html)
+        ok = text is None or text == (r.text or "")
+        if text is None:  # NULL html: the text column stands in
+            text = r.text or ""
         d = decide(text)
         scrubbed = None
         n_entities = 0
@@ -39,7 +42,7 @@ def oracle_frame(seed: int, n: int, feedback=()) -> pd.DataFrame:
             s = scrub_text(text, feedback_history=list(feedback))
             scrubbed = s.scrubbed_text
             n_entities = len(s.entities)
-        rows.append((r.url, text == r.text, d.keep, d.drop_reason,
+        rows.append((r.url, ok, d.keep, d.drop_reason,
                      d.lang_pred, scrubbed, n_entities))
     df = pd.DataFrame(rows, columns=[
         "url", "extracted_ok", "keep", "drop_reason", "lang_pred",
@@ -47,9 +50,17 @@ def oracle_frame(seed: int, n: int, feedback=()) -> pd.DataFrame:
     return df.astype({"n_entities": "int32"})  # Spark IntegerType
 
 
+def oracle_frame(seed: int, n: int, feedback=()) -> pd.DataFrame:
+    """Single-process oracle over the same generated rows."""
+    return oracle_rows(generate_batch(np.arange(n), seed), feedback)
+
+
 def spark_frame(spark, seed: int, n: int, feedback=(), parts=8) -> pd.DataFrame:
     pages = generate_pages(spark, n, seed=seed, parts=parts)
-    out = run_scrub_pipeline(pages, feedback=list(feedback))
+    return scrubbed_frame(run_scrub_pipeline(pages, feedback=list(feedback)))
+
+
+def scrubbed_frame(out) -> pd.DataFrame:
     return (
         out.select("url", "extracted_ok", "keep", "drop_reason", "lang_pred",
                    "scrubbed_text", "n_entities")
@@ -74,6 +85,52 @@ def test_differential_byte_identical(spark):
     kept = want["keep"]
     assert (got.loc[kept, "scrubbed_text"] == want.loc[kept, "scrubbed_text"]).all()
     assert got["extracted_ok"].all()  # byte-identical extraction per url
+
+
+def _wrap(body: bytes) -> bytes:
+    return b"<html><body>" + body + b"</body></html>"
+
+
+def test_edge_rows_match_oracle(spark):
+    """Hand-built pages the generator never emits (it writes only the
+    canonical wrapper around the text column) go through Spark's kernel
+    and through the single-process extract_text -> decide -> scrub_text
+    with the same outcome per url."""
+    gen = generate_batch(np.arange(8), 42)
+    kept_a, kept_b = gen.text[3], gen.text[7]  # both pass decide()
+    sentences = [s.strip() + "." for s in kept_a.split(".") if s.strip()]
+    markup = (
+        "<!DOCTYPE html><html><head><title>t</title>"
+        "<style>p { color: red }</style>"
+        "<script>var x = '<p>not text</p>';</script></head><body>"
+        + "".join(f"<p>{s}</p>" for s in sentences)
+        + "</body></html>"
+    ).encode("utf-8")
+    rows = [
+        ("u01_wrap_eq", _wrap(kept_a.encode()), kept_a),
+        ("u02_wrap_ne", _wrap(kept_b.encode()), kept_a),
+        ("u03_wrap_latin1", _wrap(b"caf\xe9 " + kept_a.encode()), kept_a),
+        ("u04_wrap_surrogate", _wrap(b"\xed\xa0\x80 " + kept_b.encode()),
+         kept_b),
+        ("u05_wrap_empty", _wrap(b""), ""),
+        ("u06_markup", markup, kept_a),
+        ("u07_html_empty", b"", kept_b),
+        ("u08_null_html", None, kept_b),
+        ("u09_null_both", None, None),
+    ]
+    pdf = pd.DataFrame(
+        [(u, None, h, t, "en") for u, h, t in rows],
+        columns=["url", "warc_ts", "html", "text", "lang"],
+    )
+    want = oracle_rows(pdf, FEEDBACK)
+    # the set covers both extraction outcomes and the kept/scrub path
+    assert want["keep"].sum() >= 4
+    assert not want["extracted_ok"].all()
+    pages = spark.createDataFrame(
+        [tuple(r) for r in pdf.itertuples(index=False)], PAGES_SCHEMA
+    ).repartition(3)
+    got = scrubbed_frame(run_scrub_pipeline(pages, feedback=FEEDBACK))
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_pipeline_partitioning_invariance(spark):

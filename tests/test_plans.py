@@ -79,6 +79,13 @@ def test_kernel_stage_is_narrow(spark):
     p = plan_of(out)
     assert "Exchange" not in p  # no shuffle: scan -> kernel, nothing else
     assert "MapInPandas" in p
+    # one extraction path: the raw html column is the kernel's only
+    # extraction input (no JVM-side pre-extracted side columns)
+    node = out._jdf.queryExecution().optimizedPlan()
+    assert node.nodeName() == "MapInPandas"
+    cols = node.child().output()
+    assert [cols.apply(i).name() for i in range(cols.size())] == [
+        "url", "warc_ts", "html", "text", "lang"]
 
 
 def test_resume_antijoin_is_broadcast(spark, tmp_path):
