@@ -9,7 +9,10 @@ downstream (filters, projections, aggregations, writes) stays JVM-side.
 Extraction has one path: the html column crosses the JVM->Python
 boundary once, as-is, and ``extract_text`` decodes it in the kernel --
 the same function the single-process oracle calls, so Spark and the
-oracle agree on the extracted text per url by construction.
+oracle agree on the extracted text per url by construction.  Scoring
+has one path too: langid and perplexity score the whole Arrow batch with
+the scorers the oracle's ``decide(text)`` calls on a batch of one, so
+``lang_score`` and ``ppl`` agree bit for bit.
 
 Scale design:
 - narrow stage: no shuffle; input split sizing via

@@ -7,7 +7,10 @@ generated deterministically from seed corpora embedded in this package --
 no external model files, no network (BASELINE.json: no external data).
 
 Pure Python + numpy; no Spark imports (same dual use as kernel/: executed
-inside vectorized pandas UDFs and as the pytest oracle).
+inside vectorized pandas UDFs and as the pytest oracle).  Each model has
+one scorer, the Arrow-batch form (``predict_language_batch``,
+``perplexity_batch``); ``predict_language`` and ``perplexity`` score a
+batch of one, so the oracle and the kernel compute the same values.
 """
 
 from .langid import predict_language

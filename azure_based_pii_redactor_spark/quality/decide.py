@@ -38,7 +38,9 @@ def decide(
     """``lang`` / ``ppl`` may carry precomputed values -- the Arrow-batch
     kernel scores whole batches via ``predict_language_batch`` /
     ``perplexity_batch`` and passes each result through here, so the
-    decision logic has exactly one home."""
+    decision logic has exactly one home.  Without them the text is scored
+    as a batch of one by the same scorers, so the single-process oracle
+    and the kernel agree bit for bit on ``lang_score`` and ``ppl``."""
     lang_pred, lang_score = lang if lang is not None else predict_language(text)
     if ppl is None:
         ppl = perplexity(text)

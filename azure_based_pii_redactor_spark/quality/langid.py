@@ -115,26 +115,25 @@ def _int_key_table() -> tuple["_np.ndarray", "_np.ndarray"]:
 
 _KEYS, _ROWS = _int_key_table()
 
-# --- dense-alphabet fast path (r8) ----------------------------------------
+# --- table-gather trigram rows --------------------------------------------
 # The per-doc cost of scoring was dominated by the normalization regex sub
 # and the binary-searched trigram lookup (profiled: ~60% of the batch).
 # Both collapse into table gathers: a per-codepoint symbol table replaces
 # the regex (built FROM ``_STRIP`` itself, so the two normalizations cannot
 # disagree), and a dense symbol-trigram table replaces ``searchsorted`` for
-# trigrams drawn from the corpora's Latin alphabets.  Trigrams touching any
-# char outside the dense alphabet (CJK vocab chars, arbitrary kept
-# letters) are resolved through the EXACT sparse path (``_rows_for``), and
-# astral-plane documents fall back to the original string pipeline -- row
-# indices are identical by construction on every path (pinned by a
-# differential test over all of them).
+# trigrams drawn from the corpora's Latin alphabets.  Astral code points
+# (above the BMP table) are classified by ``_STRIP`` one by one.  Trigrams
+# touching any kept char outside the dense alphabet (CJK vocab chars,
+# arbitrary kept letters, astral letters) are resolved through the EXACT
+# sparse lookup (``_rows_for``), so row indices equal the string-trigram
+# ``_INDEX`` lookup on every input (pinned by tests over all of them).
 _BMP = 0x10000
 _DENSE_MAX = 0x500  # Latin-1 + Latin Extended covers the non-CJK corpora
 
 
 def _build_fast_tables():
-    kept = _np.zeros(_BMP, _np.bool_)
     m = _STRIP.match
-    kept[[c for c in range(_BMP) if m(chr(c)) is None]] = True
+    stripped = [c for c in range(_BMP) if m(chr(c)) is not None]
     dense_chars = sorted(
         ch
         for ch in {c for tg in _TABLE for c in tg}
@@ -142,7 +141,7 @@ def _build_fast_tables():
     )
     k = len(dense_chars) + 2  # sym 0 = outside the dense set, 1 = space
     sym = _np.zeros(_BMP, _np.int64)
-    sym[~kept] = 1  # every non-kept char normalizes to a space
+    sym[stripped] = 1  # every non-kept char normalizes to a space
     for i, ch in enumerate(dense_chars):
         sym[ord(ch)] = i + 2
     sym_of = {ch: i + 2 for i, ch in enumerate(dense_chars)}
@@ -151,24 +150,31 @@ def _build_fast_tables():
     for tg, row in _INDEX.items():
         syms = [sym_of.get(ch) for ch in tg]
         if None in syms:
-            continue  # non-dense char: resolved via the sparse fallback
+            continue  # non-dense char: resolved via the sparse lookup
         a, b, c = syms
         tri[(a * k + b) * k + c] = row
-    return kept, sym, tri, k
+    return sym, tri, k
 
 
-_KEPT_CP, _CP_SYM, _TRI_ROWS, _K_SYM = _build_fast_tables()
-_ASTRAL = object()  # sentinel: doc needs the original string pipeline
+_CP_SYM, _TRI_ROWS, _K_SYM = _build_fast_tables()
 
 
-def _trigram_rows_fast(head_low: str):
-    """Matrix row per trigram of the lowered head, via table gathers.
-    Returns an int array, None (too short to score), or ``_ASTRAL``."""
-    cps = _np.frombuffer(head_low.encode("utf-32-le"), dtype=_np.uint32)
+def _trigram_rows(text: str) -> "_np.ndarray | None":
+    """Matrix row per trigram of ``text``'s normalized head, via table
+    gathers (None = too short to score) -- equal to
+    ``[_INDEX.get(tg, 0) for tg in _trigrams(text)]`` on every input."""
+    cps = _np.frombuffer(
+        text[:LANGID_MAX_CHARS].lower().encode("utf-32-le"), dtype=_np.uint32
+    ).astype(_np.int64)
     if len(cps) and int(cps.max()) >= _BMP:
-        return _ASTRAL
-    cps = cps.astype(_np.int64)
-    syms = _CP_SYM[cps]
+        astral = cps >= _BMP
+        syms = _CP_SYM[_np.where(astral, 0, cps)]
+        syms[astral] = [
+            0 if _STRIP.match(chr(c)) is None else 1
+            for c in cps[astral].tolist()
+        ]
+    else:
+        syms = _CP_SYM[cps]
     n = len(syms)
     has_rare = bool((syms == 0).any())  # kept char outside the dense set
     # pad one space each side, then collapse space runs -- exactly
@@ -184,7 +190,7 @@ def _trigram_rows_fast(head_low: str):
     if len(s) - 2 < MIN_TRIGRAMS:
         return None
     rows = _TRI_ROWS[(s[:-2] * _K_SYM + s[1:-1]) * _K_SYM + s[2:]]
-    if has_rare:  # trigrams touching a non-dense char: exact sparse path
+    if has_rare:  # trigrams touching a non-dense char: exact sparse lookup
         cbuf = _np.empty(n + 2, _np.int64)
         cbuf[0] = cbuf[-1] = 32
         _np.copyto(cbuf[1:-1], _np.where(buf[1:-1] == 1, 32, cps))
@@ -197,30 +203,6 @@ def _trigram_rows_fast(head_low: str):
     return rows
 
 
-def _trigram_rows(text: str) -> "_np.ndarray | None":
-    """Row indices for scoring ``text``'s head (None = too short), fast
-    path with exact fallbacks -- identical to
-    ``_rows_for(_trigram_keys(text))`` on every input."""
-    r = _trigram_rows_fast(text[:LANGID_MAX_CHARS].lower())
-    if r is _ASTRAL:
-        tk = _trigram_keys(text)
-        return None if tk is None else _rows_for(tk)
-    return r
-
-
-def _trigram_keys(text: str) -> "_np.ndarray | None":
-    """Normalized-head trigrams as an int64 key array (None if the doc is
-    too short to score).  One regex sub + one encode per doc; the slide
-    is three vectorized shifts over the codepoint array."""
-    norm = " " + _STRIP.sub(" ", text[:LANGID_MAX_CHARS].lower()).strip() + " "
-    cps = _np.frombuffer(norm.encode("utf-32-le"), dtype=_np.uint32).astype(
-        _np.int64
-    )
-    if len(cps) - 2 < MIN_TRIGRAMS:
-        return None
-    return (cps[:-2] * _CODEPOINT_BASE + cps[1:-1]) * _CODEPOINT_BASE + cps[2:]
-
-
 def _rows_for(keys: "_np.ndarray") -> "_np.ndarray":
     """Matrix row index per trigram key (row 0 = unknown floor)."""
     pos = _np.minimum(_np.searchsorted(_KEYS, keys), len(_KEYS) - 1)
@@ -228,17 +210,19 @@ def _rows_for(keys: "_np.ndarray") -> "_np.ndarray":
 
 
 def predict_language_batch(texts) -> list[tuple[str, float]]:
-    """Batch form of ``predict_language`` -- one concatenated searchsorted
-    + segmented ``reduceat`` per ~1M trigrams instead of per-doc numpy
-    call overhead (the Arrow-batch hot path; ~2x over the per-doc form).
-    Returns one (lang, score) per input, identical decisions."""
+    """Return one ``(lang, score)`` per input; ``("unk", 0.0)`` when
+    undecidable.  The only langid scorer: ``predict_language`` is the
+    batch of one.  Trigram rows of every doc are concatenated and summed
+    per language with one segmented ``reduceat`` per ~1M trigrams; each
+    doc is its own segment, so its score does not depend on the batch it
+    lands in."""
     out: list = [None] * len(texts)
     segs: list[tuple[int, "_np.ndarray"]] = []
     for j, t in enumerate(texts):
         if cjk_fraction(t) > 0.3:
             out[j] = ("zh", 1.0)
             continue
-        tk = _trigram_rows(t)  # r8: row indices directly (dense tables)
+        tk = _trigram_rows(t)
         if tk is None:
             out[j] = ("unk", 0.0)
             continue
@@ -261,6 +245,8 @@ def predict_language_batch(texts) -> list[tuple[str, float]]:
         sums = _np.empty((len(chunk), _MATRIX.shape[1]))
         for j in range(_MATRIX.shape[1]):
             sums[:, j] = _np.add.reduceat(_MATRIX[:, j].take(rows), starts)
+        # posterior under a uniform language prior = softmax of the TOTAL
+        # log-likelihoods (argmax keeps the first language on a tie)
         best = _np.argmax(sums, axis=1)
         mx = sums[_np.arange(len(chunk)), best]
         z = _np.exp(sums - mx[:, None]).sum(axis=1)
@@ -284,23 +270,4 @@ def cjk_fraction(text: str) -> float:
 
 def predict_language(text: str) -> tuple[str, float]:
     """Return ``(lang, score)``; ``("unk", 0.0)`` when undecidable."""
-    if cjk_fraction(text) > 0.3:
-        return "zh", 1.0
-    tk = _trigram_keys(text)
-    if tk is None:
-        return "unk", 0.0
-    # vectorized scoring: int-key trigrams, binary-searched row indices,
-    # one matrix gather-sum (identical decisions to the string-trigram
-    # dict form, which survives in tests as the reference).  Measured
-    # dead ends kept out: Counter-dedup + weighted matmul loses (unique
-    # trigram ratio is only ~0.67, Counter overhead dominates), as does
-    # np.fromiter over the index genexpr.
-    sums = _MATRIX[_rows_for(tk)].sum(axis=0)
-    best = max(range(len(LANGUAGES)), key=sums.__getitem__)
-    # Posterior probability under a uniform language prior = softmax of the
-    # TOTAL log-likelihoods (saturates toward 1.0 as evidence accumulates;
-    # short or out-of-model docs stay near 1/|LANGUAGES|).
-    mx = sums[best]
-    z = sum(math.exp(s - mx) for s in sums)
-    score = 1.0 / z
-    return LANGUAGES[best], score
+    return predict_language_batch([text])[0]

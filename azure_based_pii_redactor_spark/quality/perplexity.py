@@ -112,33 +112,14 @@ WORST_PERPLEXITY = 1.0 / (_L_FLOOR * _FLOOR)
 
 
 def perplexity(text: str) -> float:
-    """Interpolated bigram perplexity; ``inf``-safe (capped by the floor).
-
-    Empty/wordless documents return ``WORST_PERPLEXITY`` (the score of
-    all-OOV text -- they must never outscore gibberish).  Scoring is
-    vectorized (id-array gathers + one ``np.log`` over the batch); the
-    scalar reference formulation survives as ``perplexity_scalar`` and
-    the two are pinned equal-decision in tests.
-    """
-    import numpy as np
-
-    words = tokenize(text)
-    if not words:
-        return WORST_PERPLEXITY
-    from itertools import repeat
-
-    # map(dict.get, words, repeat(0)) stays in C -- the genexpr form was
-    # the profiled hot spot (one Python frame per word)
-    ids = np.fromiter(map(_WID.get, words, repeat(0)), np.int64, len(words))
-    prev = np.empty_like(ids)
-    prev[0] = _BOS_ID
-    prev[1:] = ids[:-1]
-    return float(math.exp(-_kn_logp(np, ids, prev).sum() / len(words)))
+    """Interpolated bigram perplexity of one document: the batch of one
+    (``perplexity_batch([text])[0]``)."""
+    return perplexity_batch([text])[0]
 
 
 def _kn_logp(np, ids, prev):
     """Vectorized interpolated-KN log probabilities for aligned
-    (prev, word) id arrays -- shared by the per-doc and batch forms."""
+    (prev, word) id arrays."""
     keys = prev * _STRIDE + ids
     pos = np.minimum(np.searchsorted(_BI_KEYS, keys), len(_BI_KEYS) - 1)
     bi = np.where(_BI_KEYS[pos] == keys, _BI_VALS[pos], 0.0)
@@ -153,13 +134,17 @@ def _kn_logp(np, ids, prev):
 
 
 def perplexity_batch(texts: list[str]) -> list[float]:
-    """Whole-Arrow-batch perplexity: token ids for every document are
-    concatenated into ONE numpy pipeline (one searchsorted, one log, one
-    segmented reduceat) instead of ~10 small numpy calls per document --
-    the same batching ``predict_language_batch`` uses.  Per-document
-    results match ``perplexity`` to float noise (the segment sum
-    associates additions differently); decisions are pinned identical in
-    tests."""
+    """Interpolated bigram perplexity per document; ``inf``-safe (capped by
+    the floor).  The only perplexity scorer: ``perplexity`` is the batch
+    of one.
+
+    Empty/wordless documents return ``WORST_PERPLEXITY`` (the score of
+    all-OOV text -- they must never outscore gibberish).  Token ids for
+    every document are concatenated into ONE numpy pipeline (one
+    searchsorted, one log, one segmented reduceat); each document is its
+    own segment, so its value does not depend on the batch it lands in.
+    The scalar reference formulation survives as ``perplexity_scalar``
+    and tests pin the two equal to float noise."""
     import numpy as np
     from itertools import repeat
 
@@ -171,6 +156,8 @@ def perplexity_batch(texts: list[str]) -> list[float]:
         words = tokenize(t)
         if not words:
             continue
+        # map(dict.get, words, repeat(0)) stays in C -- the genexpr form
+        # was the profiled hot spot (one Python frame per word)
         id_arrays.append(
             np.fromiter(map(wid_get, words, repeat(0)), np.int64, len(words))
         )

@@ -9,18 +9,13 @@ Components:
   pagerank       domain PageRank over the bench-shaped edge list
   warc           WARC scan (same fixture + split sizing as bench.py)
   wet            WET scan
-  pipeline       flagship scrub pipeline (batch)
-  corpus         corpus builder funnel with per-stage wall breakdown
-  admission      admission loop, 8 epochs, per-epoch wall + flatness
   doc_features   text_doc_features isolated
-  kernel_stages  pure-Python kernel stage breakdown (no Spark)
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
@@ -128,18 +123,6 @@ def run_warc(spark, reps, wet=False):
     return [_timed(f"{ext}_scan", lambda: _noop(reader(spark, glob)), reps)]
 
 
-def run_pipeline(spark, reps):
-    from azure_based_pii_redactor_spark.engine.pipeline import (
-        run_scrub_pipeline,
-    )
-
-    pages, _ = _pages(spark)
-    _noop(run_scrub_pipeline(pages.limit(2000)))  # warm-up
-    spark.sparkContext.setJobDescription("bench_extra: pipeline_scrub")
-    return [_timed("pipeline_scrub",
-                   lambda: _noop(run_scrub_pipeline(pages)), reps)]
-
-
 def run_doc_features(spark, reps):
     from azure_based_pii_redactor_spark.engine.operators import textstats
 
@@ -151,161 +134,11 @@ def run_doc_features(spark, reps):
     )]
 
 
-def run_corpus(spark, reps):
-    from pyspark.sql import functions as F
-
-    from azure_based_pii_redactor_spark.engine.corpus import (
-        build_training_corpus,
-    )
-
-    pages, _ = _pages(spark)
-    eval_docs = pages.filter(
-        F.pmod(F.xxhash64("url"), F.lit(41)) == 0
-    ).select("text")
-
-    def one():
-        cb, _r = build_training_corpus(pages, eval_docs=eval_docs,
-                                       sample_pct=50)
-        _noop(cb)
-
-    spark.sparkContext.setJobDescription("bench_extra: corpus_builder")
-    return [_timed("corpus_builder", one, reps)]
-
-
-def run_admission(spark, reps, epochs=8):
-    """8-epoch admission cost curve (VERDICT r7 #1 evidence shape):
-    per-epoch wall while history grows; flat curve = the scale claim."""
-    from pyspark.sql import functions as F
-
-    from azure_based_pii_redactor_spark.sources.pages import generate_pages
-    from azure_based_pii_redactor_spark.streaming.admission import (
-        run_streaming_admission, seed_band_store,
-    )
-
-    _, n_pages = _pages(spark)
-    adm_root = os.path.join(SCRATCH, "admission_extra")
-    shutil.rmtree(adm_root, ignore_errors=True)
-    adm_src = os.path.join(adm_root, "src")
-    os.makedirs(adm_src)
-    band_p = os.path.join(adm_root, "bands")
-    out_p = os.path.join(adm_root, "admitted")
-    adm_ckpt = os.path.join(adm_root, "ckpt")
-    hist_n = max(n_pages // 3, 1_500)
-    slice_n = max(n_pages // 25, 200)
-    refetch_n = slice_n // 5
-
-    def _docs(df, id_offset=0):
-        return df.select(
-            (F.xxhash64("url") + F.lit(id_offset)).alias("doc_id"), "text"
-        )
-
-    hist_docs = _docs(
-        generate_pages(spark, hist_n, seed=11, parts=CPUS)
-    ).localCheckpoint()
-
-    # warm-up epochs through throwaway stores (same policy as bench.py)
-    warm_hist = _docs(generate_pages(spark, 400, seed=23, parts=4))
-    warm_src = os.path.join(adm_root, "warm_src")
-    os.makedirs(warm_src)
-    seed_band_store(warm_hist, os.path.join(adm_root, "warm_bands"))
-    for i in range(2):
-        _docs(
-            generate_pages(spark, 200, seed=23, parts=2,
-                           start_id=400 + i * 200)
-        ).write.mode("append").parquet(warm_src)
-        run_streaming_admission(
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(warm_src),
-            warm_hist,
-            os.path.join(adm_root, "warm_bands"),
-            os.path.join(adm_root, "warm_admitted"),
-            os.path.join(adm_root, "warm_ckpt"),
-        ).awaitTermination()
-
-    t0 = time.time()
-    seed_band_store(hist_docs, band_p)
-    seed_sec = round(time.time() - t0, 3)
-    epoch_secs = []
-    for i in range(epochs):
-        fresh = generate_pages(spark, slice_n, seed=11, parts=8,
-                               start_id=hist_n + i * slice_n)
-        refetch = generate_pages(spark, refetch_n, seed=11, parts=2,
-                                 start_id=i * refetch_n)
-        _docs(fresh).unionByName(
-            _docs(refetch, id_offset=1 + i)
-        ).repartition(8).write.mode("append").parquet(adm_src)
-        spark.sparkContext.setJobDescription(f"bench_extra: admission e{i}")
-        t0 = time.time()
-        run_streaming_admission(
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(adm_src),
-            hist_docs, band_p, out_p, adm_ckpt,
-        ).awaitTermination()
-        epoch_secs.append(round(time.time() - t0, 3))
-    counts = {
-        int(r.epoch_id): int(r.n)
-        for r in spark.read.parquet(out_p)
-        .groupBy("epoch_id").agg(F.count("*").alias("n")).collect()
-    }
-    return [{
-        "label": "admission",
-        "seed_sec": seed_sec,
-        "epoch_secs": epoch_secs,
-        "admitted": [counts.get(i, 0) for i in range(epochs)],
-        "history_docs": hist_n,
-        "slice_docs": slice_n + refetch_n,
-    }]
-
-
-def run_kernel_stages(_spark_unused, reps):
-    """Pure-Python per-stage kernel profile over a corpus slice (no
-    Spark): the relative weights that decide where kernel work goes."""
-    import pyarrow.parquet as pq
-
-    n_pages = max(int(500_000 * _sf()), 2_000)
-    t = pq.read_table(os.path.join(SCRATCH, f"pages_{n_pages}"),
-                      columns=["text"])
-    texts = [x or "" for x in t.slice(0, 4000).column("text").to_pylist()]
-
-    from azure_based_pii_redactor_spark.kernel.scrub import scrub_text
-    from azure_based_pii_redactor_spark.quality.decide import decide
-    from azure_based_pii_redactor_spark.quality.langid import (
-        predict_language_batch,
-    )
-    from azure_based_pii_redactor_spark.quality.perplexity import (
-        perplexity_batch,
-    )
-
-    out = []
-    out.append(_timed("langid_batch",
-                      lambda: predict_language_batch(texts), reps))
-    out.append(_timed("perplexity_batch",
-                      lambda: perplexity_batch(texts), reps))
-    langs = predict_language_batch(texts)
-    ppls = perplexity_batch(texts)
-
-    def _decide_all():
-        return [decide(x, lang=langs[i], ppl=ppls[i])
-                for i, x in enumerate(texts)]
-
-    out.append(_timed("decide", _decide_all, reps))
-    kept = [x for x, d in zip(texts, _decide_all()) if d.keep]
-    out.append(_timed(
-        "scrub_text",
-        lambda: [scrub_text(x, feedback_history=[]) for x in kept], reps,
-    ))
-    return out
-
-
 COMPONENTS = {
     "pagerank": run_pagerank,
     "warc": lambda s, r: run_warc(s, r, wet=False),
     "wet": lambda s, r: run_warc(s, r, wet=True),
-    "pipeline": run_pipeline,
-    "corpus": run_corpus,
-    "admission": run_admission,
     "doc_features": run_doc_features,
-    "kernel_stages": run_kernel_stages,
 }
 
 
@@ -313,11 +146,10 @@ def main():
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     fn = COMPONENTS[name]
-    spark = None if name == "kernel_stages" else _session()
+    spark = _session()
     results = fn(spark, reps)
     print(json.dumps({"component": name, "results": results}))
-    if spark is not None:
-        spark.stop()
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -11,13 +11,24 @@ it prints each side's median and quartiles, the number of pairs the
 change won (ties count for neither side), and whether the gap between the
 medians exceeds the parent's interquartile range -- a gain is claimed
 only when the change wins at least nine tenths of the pairs and the gap
-exceeds that spread.  The last stdout line is the same summary as JSON.
+exceeds that spread.  Beside it stands a no-regression verdict against the
+metric's ``bound``: ``worse_by`` is the change median's relative gap from
+the parent median in the metric's bad direction, and the verdict is
+
+* ``unresolved`` when the parent's IQR/median exceeds ``bound`` and not
+  every change run beats every parent run (the spread hides a gap that
+  large),
+* otherwise ``worse`` when ``worse_by`` exceeds ``bound``,
+* otherwise ``ok``.
+
+The last stdout line is the same summary as JSON.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import statistics
 import subprocess
@@ -62,8 +73,29 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def _rel(x: float, base: float) -> float:
+    """``x / |base|``; with a zero base, 0 for no gap, else infinite."""
+    if base:
+        return x / abs(base)
+    return 0.0 if x <= 0 else math.inf
+
+
+def verdict(parent: list[float], change: list[float], bound: float,
+            higher: bool) -> tuple[str, float, float]:
+    """``(verdict, worse_by, parent IQR/median)`` for one metric."""
+    par, chg = quartiles(parent), quartiles(change)
+    worse_by = _rel(par[1] - chg[1] if higher else chg[1] - par[1], par[1])
+    spread = _rel(par[2] - par[0], par[1])
+    beats_all = (min(change) > max(parent)) if higher \
+        else (max(change) < min(parent))
+    if spread > bound and not beats_all:
+        return "unresolved", worse_by, spread
+    return ("worse" if worse_by > bound else "ok"), worse_by, spread
+
+
 def summarize(pairs: list[dict], metrics: list[dict]) -> dict:
-    """Per metric: quartiles of each side, change wins, gap vs parent IQR."""
+    """Per metric: quartiles of each side, change wins, gap vs parent IQR,
+    and the no-regression verdict against the metric's ``bound``."""
     out = {}
     for m in metrics:
         name, higher = m["name"], m["better"] == "higher"
@@ -77,10 +109,14 @@ def summarize(pairs: list[dict], metrics: list[dict]) -> dict:
         chg = quartiles([b for _, b in got])
         wins = sum((b > a) if higher else (b < a) for a, b in got)
         gap = chg[1] - par[1]
+        v, worse_by, spread = verdict([a for a, _ in got], [b for _, b in got],
+                                      m["bound"], higher)
         out[name] = {
             "parent": par, "change": chg, "pairs": len(got), "change_wins": wins,
             "change_better": gap > 0 if higher else gap < 0,
             "gap_exceeds_parent_iqr": abs(gap) > par[2] - par[0],
+            "bound": m["bound"], "worse_by": worse_by, "parent_spread": spread,
+            "verdict": v,
         }
     return out
 
@@ -127,7 +163,7 @@ def main(argv=None) -> int:
               f"/{len(pairs)}, failed ops {sum(p[s].get('failed') or 0 for p in pairs)}"
               f" of {sum(p[s].get('attempted') or 0 for p in pairs)}")
     print(f"  {'metric':<22} {'parent q1/med/q3':<28} {'change q1/med/q3':<28}"
-          " wins  gap>IQR")
+          " wins  gap>IQR  worse_by  verdict")
     for name, r in summary.items():
         if r is None:
             print(f"  {name:<22} no metrics")
@@ -135,7 +171,9 @@ def main(argv=None) -> int:
         par = "/".join(f"{v:.4g}" for v in r["parent"])
         chg = "/".join(f"{v:.4g}" for v in r["change"])
         print(f"  {name:<22} {par:<28} {chg:<28} {r['change_wins']:>2}/{r['pairs']:<2}"
-              f" {r['gap_exceeds_parent_iqr']}")
+              f" {str(r['gap_exceeds_parent_iqr']):<8} {r['worse_by']:>+8.3f}"
+              f"  {r['verdict']} (bound {r['bound']}, parent IQR/med "
+              f"{r['parent_spread']:.3f})")
     print(json.dumps({"workload": args.workload, "seeds": args.seeds,
                       "pairs": len(pairs), "summary": summary}))
     return 0

@@ -1,7 +1,8 @@
 """Oracle-differential test (SURVEY.md section 5 item 1; the BASELINE.json
 correctness gate): the Spark pipeline must agree with the single-process
-pure-Python oracle byte-for-byte on scrubbed_text per url, and exactly on
-keep/drop labels (F1 == 1.0 here, gate is >= 0.99)."""
+pure-Python oracle byte-for-byte on scrubbed_text per url, bit for bit on
+lang_score and ppl, and exactly on keep/drop labels (F1 == 1.0 here, gate
+is >= 0.99)."""
 
 import pandas as pd
 import numpy as np
@@ -42,11 +43,12 @@ def oracle_rows(pdf: pd.DataFrame, feedback=()) -> pd.DataFrame:
             s = scrub_text(text, feedback_history=list(feedback))
             scrubbed = s.scrubbed_text
             n_entities = len(s.entities)
-        rows.append((r.url, ok, d.keep, d.drop_reason,
-                     d.lang_pred, scrubbed, n_entities))
+        rows.append((r.url, ok, d.keep, d.drop_reason, d.lang_pred,
+                     d.lang_score, d.ppl, scrubbed, n_entities))
     df = pd.DataFrame(rows, columns=[
         "url", "extracted_ok", "keep", "drop_reason", "lang_pred",
-        "scrubbed_text", "n_entities"]).sort_values("url").reset_index(drop=True)
+        "lang_score", "ppl", "scrubbed_text",
+        "n_entities"]).sort_values("url").reset_index(drop=True)
     return df.astype({"n_entities": "int32"})  # Spark IntegerType
 
 
@@ -63,7 +65,7 @@ def spark_frame(spark, seed: int, n: int, feedback=(), parts=8) -> pd.DataFrame:
 def scrubbed_frame(out) -> pd.DataFrame:
     return (
         out.select("url", "extracted_ok", "keep", "drop_reason", "lang_pred",
-                   "scrubbed_text", "n_entities")
+                   "lang_score", "ppl", "scrubbed_text", "n_entities")
         .toPandas()
         .sort_values("url")
         .reset_index(drop=True)
@@ -79,7 +81,8 @@ def test_generator_partitioning_invariance(spark):
 def test_differential_byte_identical(spark):
     want = oracle_frame(42, N, FEEDBACK)
     got = spark_frame(spark, 42, N, FEEDBACK)
-    pd.testing.assert_frame_equal(got, want)
+    # lang_score and ppl bit-exact: the oracle and the kernel share scorers
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
     # explicit gate statements
     assert (got["keep"] == want["keep"]).all()  # F1 == 1.0
     kept = want["keep"]
@@ -130,7 +133,7 @@ def test_edge_rows_match_oracle(spark):
         [tuple(r) for r in pdf.itertuples(index=False)], PAGES_SCHEMA
     ).repartition(3)
     got = scrubbed_frame(run_scrub_pipeline(pages, feedback=FEEDBACK))
-    pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
 def test_pipeline_partitioning_invariance(spark):

@@ -109,8 +109,11 @@ def test_band_params_well_formed(t):
     )
 )
 def test_langid_batch_always_matches_per_doc(texts):
-    """Batch and per-doc langid agree on arbitrary (incl. degenerate)
-    unicode inputs -- same language, score within float noise."""
+    """On arbitrary (incl. degenerate) unicode inputs a doc's langid does
+    not depend on its batch (exact), and the score is the string-trigram
+    softmax to float noise, with the same language."""
+    from tests.test_quality import langid_reference
+
     from azure_based_pii_redactor_spark.quality.langid import (
         predict_language,
         predict_language_batch,
@@ -118,9 +121,27 @@ def test_langid_batch_always_matches_per_doc(texts):
 
     batch = predict_language_batch(texts)
     for t, (lang, score) in zip(texts, batch):
-        l1, s1 = predict_language(t)
-        assert lang == l1
-        assert abs(score - s1) < 1e-9
+        assert (lang, score) == predict_language(t)
+        ref_lang, ref_score = langid_reference(t)
+        assert lang == ref_lang
+        assert abs(score - ref_score) < 1e-9
+
+
+@settings(max_examples=300, deadline=None)
+@given(text=st.text())
+def test_langid_trigram_rows_match_string_trigrams_property(text):
+    """The table-gather trigram rows equal the string-trigram ``_INDEX``
+    rows on text from every plane (astral letters and emoji included)."""
+    from tests.test_quality import langid_reference_rows
+
+    from azure_based_pii_redactor_spark.quality.langid import _trigram_rows
+
+    ref = langid_reference_rows(text)
+    got = _trigram_rows(text)
+    if ref is None:
+        assert got is None
+    else:
+        assert got is not None and list(got) == ref
 
 
 @settings(max_examples=100, deadline=None)
