@@ -120,9 +120,9 @@ def write_scrub_output(
     contribute nothing, so stale partitions left in them by a prior run
     over a reused ``output_path`` (different run_id, or a changed
     ``n_buckets``) are never counted into THIS run's lineage or marked
-    complete.  Requires
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` (session.py) so
-    only the written buckets are replaced.
+    complete.  Only the written buckets are replaced, whatever the
+    session's ``partitionOverwriteMode``: the parquet writer goes through
+    ``tableio.overwrite_partitions``, which pins dynamic mode per write.
 
     How the produced-bucket set is learned depends on the writer
     (``tableio.BucketTableWriter``): writers exposing

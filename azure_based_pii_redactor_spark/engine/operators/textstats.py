@@ -969,69 +969,23 @@ def _bloom_positions(col, m: int):
     ]
 
 
-def build_window_bloom(
-    docs, n: int = WINDOW_N, text_col: str = "text", fpp: float = 1e-3,
-    max_words: int | None = None,
-) -> tuple[list, int]:
-    """Aggregate the DISTINCT n-word windows of ``docs`` into a Bloom
-    filter, returned as ``(words, m)`` -- a python list of ``m // 64``
-    int64 bit-words.  ONE aggregation builds it: window explode ->
-    k probe positions -> per-64-bit-word ``bit_or`` -- and the driver
-    collect is bounded by ``m // 64`` rows, a function of the CHOSEN
-    capacity, never of the eval corpus size (the property that makes
-    this the scale path: a 10^9-window eval suite at fpp 1e-3 is a
-    ~2 GB filter regardless of how its windows are distributed).  The
-    window frame is persisted so the sizing count and the probe
-    aggregation share one eval-corpus scan (ADVICE r6)."""
-    bits_df, m, n_wins, wins = _bloom_bits_frame(
-        docs, n, text_col, fpp, persist_windows=True
-    )
-    try:
-        if max_words is not None and m // 64 > max_words:
-            # guard BEFORE the probe aggregation and the m//64-row
-            # collect -- the expensive work the cap exists to prevent
-            # (review r6: a post-collect check would OOM the driver
-            # first)
-            raise ValueError(
-                f"bloom filter needs {m // 64} words for {n_wins}"
-                f" windows at fpp={fpp} (> {max_words}): too large to"
-                " embed as a plan literal -- use"
-                " decontaminate_bloom(mode='table') (the"
-                " broadcast-join probe) for this capacity"
-            )
-        return _assemble_bloom_words(bits_df, m), m
-    finally:
-        wins.unpersist()
-
-
-def _assemble_bloom_words(bits_df, m: int) -> list:
-    """Collect a (w, bits) frame into the dense ``m // 64``-word list
-    the literal probe embeds -- <= m // 64 tiny rows, bounded by the
-    CHOSEN capacity, never by corpus size."""
-    words = [0] * (m // 64)
-    for r in bits_df.collect():
-        words[r.w] = r.bits
-    return words
-
-
 def _bloom_bits_frame(
-    docs, n: int, text_col: str, fpp: float, persist_windows: bool = False
-) -> tuple["DataFrame", int, int, "DataFrame"]:
-    """The filter's (w, bits) rows as an (unmaterialized) DataFrame plus
-    (m, n_distinct_windows, windows_frame): the shared build under both
-    probe modes -- the literal path collects it (bounded by m // 64),
-    the table path broadcasts it as-is (bounded by executor memory, the
-    10^9-window regime).  ``persist_windows`` caches the distinct-window
-    frame so the sizing count and the downstream probe aggregation scan
-    the eval corpus once -- right for the literal/auto regime, wrong
-    for a 10^9-window table build (the caller owns the unpersist)."""
+    docs, n: int, text_col: str, fpp: float
+) -> tuple["DataFrame", int, int]:
+    """The filter over the DISTINCT n-word windows of ``docs`` as an
+    (unmaterialized) ``(w, bits)`` DataFrame -- one row per non-zero
+    64-bit word, built by ONE aggregation: window explode -> k probe
+    positions -> per-word ``bit_or`` -- plus ``(m, n_distinct_windows)``.
+    Nothing is collected to the driver: the probe broadcasts the frame
+    as-is, so the filter is bounded by executor memory (a 10^9-window
+    eval suite at fpp 1e-3 is a ~2 GB filter regardless of how its
+    windows are distributed).  The sizing count and the aggregation
+    each scan the eval windows."""
     wins = (
         docs.withColumn("__words", F.split(F.col(text_col), " "))
         .select(F.explode(_word_windows(n)).alias("win"))
         .distinct()
     )
-    if persist_windows:
-        wins = wins.persist()
     n_wins = wins.count()
     m = _bloom_m_bits(n_wins, fpp)
     pos = F.explode(F.array(*_bloom_positions(F.col("win"), m)))
@@ -1048,13 +1002,7 @@ def _bloom_bits_frame(
         .groupBy("w")
         .agg(F.bit_or("bit").alias("bits"))
     )
-    return bits_df, m, n_wins, wins
-
-
-MAX_BLOOM_LITERAL_WORDS = 1 << 13  # 8192 words = 512 Kbit filter
-# (~36k eval windows at fpp 1e-3): above this, embedding the filter as
-# a plan literal bloats codegen -- see decontaminate_bloom's docstring
-# for the broadcast-join escape at larger capacities
+    return bits_df, m, n_wins
 
 
 def decontaminate_bloom(
@@ -1064,7 +1012,6 @@ def decontaminate_bloom(
     text_col: str = "text",
     id_col: str = "doc_id",
     fpp: float = 1e-3,
-    mode: str = "auto",
 ):
     """Benchmark decontamination, BLOOM-FILTER form -- the scale path
     when the eval suite's distinct-window set is too large to broadcast
@@ -1080,83 +1027,35 @@ def decontaminate_bloom(
     decontamination (a clean doc is discarded, never a contaminated
     doc kept).
 
-    Two probe modes, IDENTICAL results (pinned in tests):
-
-    - ``'literal'`` (small filters): the bit-words embed as an
-      array<long> LITERAL in the scan projection, so the probe -- k
-      seeded xxhash64 mods, an element_at and a bitwiseAND per probe
-      -- is pure JVM codegen over the training windows: no UDF, no
-      join, no shuffle on the training side.  Capped at
-      MAX_BLOOM_LITERAL_WORDS (512 Kbit) to keep codegen sane.
-    - ``'table'`` (the 10^9-window regime): the (w, bits) rows stay a
-      DataFrame and the probe is k BROADCAST hash joins on
-      ``shiftrightunsigned(pos, 6)`` -- same arithmetic, filter size
-      bounded by executor memory (a ~2 GB filter broadcasts; a plan
-      literal that size would not compile), training side still never
-      shuffles before the per-doc rollup.  A probe word absent from
-      the table means those 64 bits are all zero (left join,
-      coalesce 0).
-
-    ``'auto'`` (default) picks literal while the filter fits the cap,
-    table above it.  Raising ``fpp`` shrinks the filter linearly if
-    over-dropping is cheap."""
-    if mode not in ("auto", "literal", "table"):
-        raise ValueError(f"unknown bloom probe mode {mode!r}")
-    if mode == "literal":
-        words, m = build_window_bloom(
-            eval_docs, n, text_col, fpp,
-            max_words=MAX_BLOOM_LITERAL_WORDS,
-        )
-        bits_df = None
-    else:
-        # auto persists the window frame (it will likely collect the
-        # small-filter words); an explicit 'table' caller knows the
-        # eval suite is 10^9-window scale, where persisting the frame
-        # just to count it is the wrong trade
-        bits_df, m, _, wins = _bloom_bits_frame(
-            eval_docs, n, text_col, fpp, persist_windows=(mode == "auto")
-        )
-        if mode == "auto":
-            if m // 64 <= MAX_BLOOM_LITERAL_WORDS:
-                words = _assemble_bloom_words(bits_df, m)
-                bits_df = None
-            wins.unpersist()  # over-cap: lazy bits_df recomputes at
-            # broadcast time, same shape as mode='table'
+    The probe is k = BLOOM_K BROADCAST hash joins of the training
+    windows against the filter's ``(w, bits)`` rows on
+    ``shiftrightunsigned(pos, 6)``, then a bitwise AND per probe -- all
+    JVM codegen, no UDF, and the training side never shuffles before
+    the per-doc rollup.  A probe word absent from the table means those
+    64 bits are all zero (left join, coalesce 0).  Raising ``fpp``
+    shrinks the filter linearly if over-dropping is cheap."""
+    bits_df, m, _ = _bloom_bits_frame(eval_docs, n, text_col, fpp)
     t = (
         train_docs.withColumn("__words", F.split(F.col(text_col), " "))
         .select(F.col(id_col), F.explode(_word_windows(n)).alias("win"))
     )
     for i, p in enumerate(_bloom_positions(F.col("win"), m)):
         t = t.withColumn(f"__p{i}", p)
-    if bits_df is None:
-        t = t.withColumn(
-            "__bf", F.array(*[F.lit(w).cast("long") for w in words])
+    tests = []
+    for i in range(BLOOM_K):
+        bt = bits_df.select(
+            F.col("w").alias(f"__w{i}"), F.col("bits").alias(f"__b{i}")
         )
-        tests = [
-            f"(element_at(__bf,"
-            f" CAST(shiftrightunsigned(__p{i}, 6) + 1 AS INT))"
-            f" & shiftleft(CAST(1 AS BIGINT), CAST(__p{i} % 64 AS INT)))"
-            f" != 0"
-            for i in range(BLOOM_K)
-        ]
-    else:
-        tests = []
-        for i in range(BLOOM_K):
-            bt = bits_df.select(
-                F.col("w").alias(f"__w{i}"),
-                F.col("bits").alias(f"__b{i}"),
-            )
-            t = t.join(
-                F.broadcast(bt),
-                F.shiftrightunsigned(F.col(f"__p{i}"), 6)
-                == F.col(f"__w{i}"),
-                "left",
-            )
-            tests.append(
-                f"(coalesce(__b{i}, CAST(0 AS BIGINT))"
-                f" & shiftleft(CAST(1 AS BIGINT),"
-                f" CAST(__p{i} % 64 AS INT))) != 0"
-            )
+        t = t.join(
+            F.broadcast(bt),
+            F.shiftrightunsigned(F.col(f"__p{i}"), 6) == F.col(f"__w{i}"),
+            "left",
+        )
+        tests.append(
+            f"(coalesce(__b{i}, CAST(0 AS BIGINT))"
+            f" & shiftleft(CAST(1 AS BIGINT),"
+            f" CAST(__p{i} % 64 AS INT))) != 0"
+        )
     hit = F.expr(" AND ".join(tests))
     return (
         t.filter(hit)

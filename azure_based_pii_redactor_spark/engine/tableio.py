@@ -58,8 +58,9 @@ def overwrite_partitions(df: DataFrame, column: str, path: str) -> None:
 
 
 class ParquetBucketWriter:
-    """Dynamic partition overwrite on parquet (requires
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` -- session.py).
+    """Dynamic partition overwrite on parquet, through
+    ``overwrite_partitions`` (which pins the dynamic mode on the write
+    itself, so the session's ``partitionOverwriteMode`` does not matter).
 
     The batch is clustered by bucket first (``REBALANCE(part_bucket)``),
     so each bucket lands in one reduce task and the table gets about one

@@ -164,7 +164,8 @@ def _trigram_rows(text: str) -> "_np.ndarray | None":
     gathers (None = too short to score) -- equal to
     ``[_INDEX.get(tg, 0) for tg in _trigrams(text)]`` on every input."""
     cps = _np.frombuffer(
-        text[:LANGID_MAX_CHARS].lower().encode("utf-32-le"), dtype=_np.uint32
+        text[:LANGID_MAX_CHARS].lower().encode("utf-32-le", "surrogatepass"),
+        dtype=_np.uint32,
     ).astype(_np.int64)
     if len(cps) and int(cps.max()) >= _BMP:
         astral = cps >= _BMP

@@ -10,6 +10,8 @@ Components:
   warc           WARC scan (same fixture + split sizing as bench.py)
   wet            WET scan
   doc_features   text_doc_features isolated
+  bloom          decontaminate_bloom of the $SPARK_GRAFT_SF_DIR documents
+                 against the text_decontaminate eval set
 """
 
 from __future__ import annotations
@@ -134,11 +136,35 @@ def run_doc_features(spark, reps):
     )]
 
 
+def run_bloom(spark, reps):
+    from pyspark.sql import functions as F
+
+    from azure_based_pii_redactor_spark.engine.operators import textstats
+
+    docs = textstats._docs(spark, SF_DIR)
+    eval_docs = docs.filter(F.col("doc_id") % textstats.EVAL_MOD == 0)
+    m, n_wins = textstats._bloom_bits_frame(
+        eval_docs, textstats.WINDOW_N, "text", textstats.BLOOM_FPP
+    )[1:3]
+    print(json.dumps({"bloom_filter_words": m // 64,
+                      "bloom_eval_windows": n_wins}))
+    _noop(textstats.decontaminate_bloom(  # warm-up (codegen)
+        docs.limit(2_000), eval_docs, fpp=textstats.BLOOM_FPP))
+    spark.sparkContext.setJobDescription("bench_extra: decontaminate_bloom")
+    return [_timed(
+        "decontaminate_bloom",
+        lambda: _noop(textstats.decontaminate_bloom(
+            docs, eval_docs, fpp=textstats.BLOOM_FPP)),
+        reps,
+    )]
+
+
 COMPONENTS = {
     "pagerank": run_pagerank,
     "warc": lambda s, r: run_warc(s, r, wet=False),
     "wet": lambda s, r: run_warc(s, r, wet=True),
     "doc_features": run_doc_features,
+    "bloom": run_bloom,
 }
 
 

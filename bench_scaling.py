@@ -541,18 +541,14 @@ def main() -> None:
             "slice (the fresh half admitted, the re-fetch tail plus\n"
             "natural near-dups rejected).  CURRENT numbers live in the\n"
             "admission_* entries of the latest BENCH_r artifact.\n\n"
-            "## Bloom broadcast-probe mode (measured by bench.py)\n\n"
-            "The over-cap decontamination path (filter too large for a\n"
-            "plan literal): a 1,200-page eval suite (38,973 distinct\n"
-            "8-word windows -> 10,526 filter words, ~1.3x over\n"
-            "MAX_BLOOM_LITERAL_WORDS) forces mode='auto' through the\n"
-            "k=5 broadcast-join probe over the full 50 k-doc train\n"
-            "corpus.  Round-7 calibrated run: 3.78 s / 13.2 k docs/s\n"
-            "(vs the literal probe's plan-literal filter at sub-second\n"
-            "driver-leg scale) -- the broadcast mode prices ~5 hash\n"
-            "joins on the exploded train windows and stays within 2x of\n"
-            "the flagship scan itself, confirming the escape hatch is\n"
-            "usable, not just present.  CURRENT numbers:\n"
+            "## Bloom broadcast-join probe (measured by bench.py)\n\n"
+            "decontaminate_bloom's one probe: k=5 broadcast hash joins\n"
+            "of the train windows against the filter's (w, bits) rows.\n"
+            "A 1,200-page eval suite (38,973 distinct 8-word windows ->\n"
+            "10,526 filter words) probed by the full 50 k-doc train\n"
+            "corpus.  Round-7 calibrated run: 3.78 s / 13.2 k docs/s --\n"
+            "~5 hash joins on the exploded train windows, within 2x of\n"
+            "the flagship scan itself.  CURRENT numbers:\n"
             "bloom_table_* entries of the latest BENCH_r artifact.\n\n"
             "## Line dedup + domain PageRank (measured by bench.py)\n\n"
             "Two round-7 operators with their own side metrics.\n"

@@ -821,8 +821,8 @@ def test_decontaminate_bloom_superset_and_fpr(spark):
     false negatives -- every doc the exact semi-join flags is flagged
     with at least as many windows; false positives over-drop at a rate
     bounded near the configured fpp; the filter size is a function of
-    capacity, not corpus; and the probe is pure JVM (no UDF, no join,
-    no shuffle before the per-doc rollup)."""
+    capacity, not corpus; and the probe is k broadcast hash joins (no
+    UDF, no shuffle before the per-doc rollup)."""
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -850,45 +850,22 @@ def test_decontaminate_bloom_superset_and_fpr(spark):
     assert ts._bloom_m_bits(0, 1e-3) == 64
     assert ts._bloom_m_bits(1000, 1e-3) % 64 == 0
     assert ts._bloom_m_bits(2000, 1e-3) > ts._bloom_m_bits(1000, 1e-3)
-    # explicit literal mode stays loudly capped; auto ESCAPES to the
-    # broadcast-table probe above the cap (the 10^9-window regime) and
-    # must still hold the superset guarantee there
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="mode='table'"):
-        ts.decontaminate_bloom(docs, eval_docs, fpp=1e-12,
-                               mode="literal")
+    # a filter far larger than the eval set needs (fpp=1e-12) must
+    # still hold the superset guarantee
     big = {r.doc_id: r.n_flagged_windows
            for r in ts.decontaminate_bloom(
                docs, eval_docs, fpp=1e-12).collect()}
     for d, n_exact in exact.items():
         assert big.get(d, 0) >= n_exact
 
-    # the two probe modes are RESULT-IDENTICAL on the same filter
-    table = {r.doc_id: r.n_flagged_windows
-             for r in ts.decontaminate_bloom(
-                 docs, eval_docs, mode="table").collect()}
-    assert table == bloom
-
-    # plan purity (literal mode): no python UDF, no join, and the only
-    # exchange is the per-doc rollup's (same as the exact form's)
+    # plan shape of the default call: k BROADCAST hash joins, no python
+    # UDF, training side unshuffled before the rollup
     plan = (
-        ts.decontaminate_bloom(docs, eval_docs, mode="literal")
+        ts.decontaminate_bloom(docs, eval_docs)
         ._jdf.queryExecution().executedPlan().toString()
     )
+    assert plan.count("BroadcastHashJoin") == ts.BLOOM_K
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "Join" not in plan
-    # table mode: k BROADCAST joins, still no UDF, training side
-    # unshuffled before the rollup
-    tplan = (
-        ts.decontaminate_bloom(docs, eval_docs, mode="table")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert tplan.count("BroadcastHashJoin") == ts.BLOOM_K
-    assert "BatchEvalPython" not in tplan and "ArrowEvalPython" not in tplan
-
-    with _pytest.raises(ValueError, match="unknown bloom probe mode"):
-        ts.decontaminate_bloom(docs, eval_docs, mode="nope")
 
 
 def test_contamination_overlap_report(spark):

@@ -362,6 +362,7 @@ def test_langid_batch_matches_per_doc():
         "Les enfants jouaient près du vieux pont pendant l'été.",
         "",
         "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 astral letters 😀 and emoji in a page " * 3,
+        "\ud800 the committee met near the old bridge \udfff",  # lone
     ]
     batch = predict_language_batch(texts)
     for t, (lang, score) in zip(texts, batch):
@@ -377,8 +378,9 @@ def test_langid_dense_fast_path_matches_sparse_rows():
     the string-trigram rows exactly on every input class: plain ASCII,
     accents inside the dense alphabet, kept chars OUTSIDE it (CJK,
     macron, fullwidth), astral-plane letters (kept, sparse lookup) and
-    emoji (stripped), digits/underscores (normalized to spaces),
-    whitespace runs, and too-short docs."""
+    emoji (stripped), lone surrogates (a python ``str`` can hold them),
+    digits/underscores (normalized to spaces), whitespace runs, and
+    too-short docs."""
     from azure_based_pii_redactor_spark.quality import langid as L
 
     texts = [
@@ -395,6 +397,7 @@ def test_langid_dense_fast_path_matches_sparse_rows():
         "emoji 😀🎉 between words are stripped like punctuation 𠀀 " * 2,
         "\uffff sits at the top of the plane İstanbul " * 2,
         "ＡＢＣ ｆｕｌｌｗｉｄｔｈ ｌｅｔｔｅｒｓ " * 4,
+        "\ud800 lone surrogates \udfff in a python str \ud83d\ude00 " * 2,
         "x" * 2000,  # beyond LANGID_MAX_CHARS
     ]
     for t in texts:
